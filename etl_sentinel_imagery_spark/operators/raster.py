@@ -12,20 +12,24 @@ explicit affine-georeferenced array model:
     (north-up rasters: b = d = 0, e < 0)
 
 Spark execution model per SURVEY.md §2.9: single-raster ops are per-row
-(mapInPandas — embarrassingly parallel over products); stack and mosaic
-are grouped ops (groupBy(key).applyInPandas) with explicit intra-group
+(mapInArrow — embarrassingly parallel over products); stack and mosaic
+are grouped ops (groupBy(key).applyInArrow) with explicit intra-group
 ordering so first-wins semantics stay deterministic under parallelism.
-Normalize is pure column arithmetic — it stays JVM-side (nested array
-transform, no Python at all).
+Normalize runs inside the stack kernel, one band at a time. Pixels cross
+the JVM↔Python boundary as Arrow nested lists through one codec pair,
+:func:`to_list_array` / :func:`from_list_array`, which reshape the flat
+int32 values buffer instead of building a Python object per pixel.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterable
+from collections.abc import Mapping
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -47,8 +51,12 @@ STACK_SCHEMA = (
 
 # =========================== numpy kernels ===============================
 def normalize_s2(arr: np.ndarray) -> np.ndarray:
-    """R1 (tx.py:20-23): clip(arr/10000, 0, 1) * 255 → uint8."""
-    return (np.clip(arr / 10000.0, 0.0, 1.0) * 255).astype(np.uint8)
+    """R1 (tx.py:20-23): clip(arr/10000, 0, 1) * 255 → uint8. The clip
+    and scale run in place, so the only float64 temporary is arr-sized."""
+    x = arr / 10000.0
+    np.clip(x, 0.0, 1.0, out=x)
+    x *= 255
+    return x.astype(np.uint8)
 
 
 def pixel_window(transform: Affine, bbox: tuple[float, float, float, float],
@@ -211,10 +219,89 @@ def utm_inverse(zone: int, northern: bool = True) -> Callable:
     return _inv(zone, northern)
 
 
+# =========================== Arrow codec =================================
+#: Arrow type of the ``transform`` struct column.
+TRANSFORM_ARROW = pa.struct([(k, pa.float64()) for k in "abcdef"])
+
+
+def to_list_array(arr: np.ndarray) -> pa.Array:
+    """numpy ``(n, *dims)`` → an n-row ``list<…list<int32>>`` Arrow array,
+    one list level per trailing dim. Built from the flat int32 buffer and
+    regular offsets, so no Python object is made per pixel."""
+    arr = np.ascontiguousarray(arr, dtype=np.int32)
+    out = pa.array(arr.reshape(-1))
+    for k in range(arr.ndim - 1, 0, -1):
+        n_lists = int(np.prod(arr.shape[:k]))
+        # the int32 cast is checked: a row past 2**31-1 values raises
+        offsets = pa.array(np.arange(n_lists + 1) * arr.shape[k], pa.int32())
+        out = pa.ListArray.from_arrays(offsets, out)
+    return out
+
+
+def from_list_array(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """The inverse of :func:`to_list_array`: n rows of a nested-list
+    column → numpy ``(n, *dims)``, reshaped from the flattened values.
+    Pass a one-row ``slice`` to decode one raster. Ragged nesting raises."""
+    dims = [len(col)]
+    while pa.types.is_list(col.type):
+        lengths = np.asarray(pc.list_value_length(col))
+        dim = int(lengths[0]) if len(lengths) else 0
+        if (lengths != dim).any():
+            raise ValueError("raster pixels are ragged or null")
+        dims.append(dim)
+        col = pc.list_flatten(col)
+    return np.asarray(col).reshape(dims)
+
+
+def as_affine(t) -> Affine:
+    """A transform given as an {a..f} mapping or as a 6-sequence → Affine."""
+    if isinstance(t, Mapping):
+        t = [t[k] for k in "abcdef"]
+    vals = tuple(map(float, t))
+    if len(vals) != 6:
+        raise ValueError(f"transform needs 6 coefficients, got {len(vals)}")
+    return vals
+
+
+def raster_batch(keys: dict[str, pa.Array], pixels: np.ndarray, transform,
+                 crs: str, nodata: int) -> pa.RecordBatch:
+    """One raster row: the one-element ``keys`` columns, then height,
+    width, pixels, transform, crs, nodata — the column order of
+    SINGLE_BAND_SCHEMA and STACK_SCHEMA, which mapInArrow matches by
+    position."""
+    return pa.RecordBatch.from_arrays(
+        [
+            *keys.values(),
+            pa.array([pixels.shape[-2]], pa.int32()),
+            pa.array([pixels.shape[-1]], pa.int32()),
+            to_list_array(pixels[None]),
+            pa.array([dict(zip("abcdef", as_affine(transform)))], TRANSFORM_ARROW),
+            pa.array([crs], pa.string()),
+            pa.array([nodata], pa.int32()),
+        ],
+        names=[*keys, "height", "width", "pixels", "transform", "crs", "nodata"],
+    )
+
+
+def raster_rows(data: pa.RecordBatch | pa.Table):
+    """(index, non-pixel fields as a dict, pixels as numpy) per row."""
+    meta = data.drop_columns(["pixels"]).to_pylist()
+    pixels = data.column("pixels")
+    for i, m in enumerate(meta):
+        yield i, m, from_list_array(pixels.slice(i, 1))[0]
+
+
+def row_keys(batch: pa.RecordBatch, i: int, *names: str) -> dict[str, pa.Array]:
+    """Row ``i`` of the named columns, as :func:`raster_batch` ``keys``."""
+    return {n: batch.column(n).slice(i, 1) for n in names}
+
+
 # =========================== Spark stages ================================
 def normalize_pixels_col(pixels: Column | str) -> Column:
-    """R1 as pure JVM nested array arithmetic — no Python in the path.
-    (floor == numpy's uint8 truncation for non-negative reflectances)."""
+    """R1 as JVM nested-array arithmetic, for callers that normalize a
+    pixel column themselves; the pipeline normalizes inside
+    :func:`stack_bands` instead. (floor == numpy's uint8 truncation for
+    non-negative reflectances.)"""
     col = F.col(pixels) if isinstance(pixels, str) else pixels
     return F.transform(
         col,
@@ -230,128 +317,95 @@ def normalize_pixels_col(pixels: Column | str) -> Column:
     )
 
 
-def _affine(row: pd.Series) -> Affine:
-    t = row["transform"]
-    return (t["a"], t["b"], t["c"], t["d"], t["e"], t["f"])
+_GEOMETRY = ("height", "width", "transform", "crs", "nodata")
 
 
-def _nested_to_np(value, depth: int) -> np.ndarray:
-    """Arrow materializes array<array<...>> as object-dtype ndarrays of
-    ndarrays — np.array(...) on those raises; rebuild by explicit stack."""
-    if depth == 1:
-        return np.asarray(value, dtype=np.int64)
-    return np.stack([_nested_to_np(v, depth - 1) for v in value])
-
-
-def _t_struct(t: Affine) -> dict:
-    return dict(zip("abcdef", (float(v) for v in t)))
-
-
-def stack_bands(single_band_df: DataFrame) -> DataFrame:
-    """R3: groupBy(product).applyInPandas — collect a product's bands in
+def stack_bands(single_band_df: DataFrame, normalize: bool = False) -> DataFrame:
+    """R3: groupBy(product).applyInArrow — collect a product's bands in
     lexicographic band order (O4, imagery_store.py:67-68) into one
-    (bands, h, w) stack."""
+    (bands, h, w) stack. ``normalize`` applies R1 (:func:`normalize_s2`)
+    one band at a time, so the float64 temporaries stay one band big.
 
-    def _stack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("band", ignore_index=True)
-        stack = np.stack([_nested_to_np(p, 2) for p in pdf["pixels"]])
-        first = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                "product_id": [first["product_id"]],
-                "bands": [list(pdf["band"])],
-                "height": [int(first["height"])],
-                "width": [int(first["width"])],
-                "pixels": [stack.tolist()],
-                "transform": [dict(first["transform"])],
-                "crs": [first["crs"]],
-                "nodata": [int(first["nodata"])],
-            }
+    Every band must match the first on height, width, transform, crs and
+    nodata; a mismatch raises ValueError naming the product and band."""
+
+    def _stack(table: pa.Table) -> pa.Table:
+        rows = sorted(raster_rows(table), key=lambda r: r[1]["band"])
+        first = rows[0][1]
+        out = np.empty((len(rows), first["height"], first["width"]), np.int32)
+        for k, (_, m, band) in enumerate(rows):
+            bad = [f for f in _GEOMETRY if m[f] != first[f]]
+            if bad or band.shape != out.shape[1:]:
+                raise ValueError(
+                    f"stack_bands: product {m['product_id']} band {m['band']} "
+                    f"differs from band {first['band']} in "
+                    f"{', '.join(bad) or f'pixel shape {band.shape}'}"
+                )
+            out[k] = normalize_s2(band) if normalize else band
+        keys = {
+            "product_id": pa.array([first["product_id"]], pa.string()),
+            "bands": pa.array([[m["band"] for _, m, _ in rows]], pa.list_(pa.string())),
+        }
+        return pa.Table.from_batches(
+            [raster_batch(keys, out, first["transform"], first["crs"], first["nodata"])]
         )
 
-    return single_band_df.groupBy("product_id").applyInPandas(
+    return single_band_df.groupBy("product_id").applyInArrow(
         _stack, schema=STACK_SCHEMA
     )
 
 
 def clip_stacks(stacked_df: DataFrame, bbox: tuple[float, float, float, float]) -> DataFrame:
-    """R2 over stacked products — per-row mapInPandas (no shuffle)."""
+    """R2 over stacked products — per-row mapInArrow (no shuffle)."""
 
-    def _clip(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                pix = _nested_to_np(r["pixels"], 3)
-                clipped, new_t = clip_to_bbox(pix, _affine(r), bbox)
-                rows.append(
-                    {
-                        "product_id": r["product_id"],
-                        "bands": list(r["bands"]),
-                        "height": clipped.shape[1],
-                        "width": clipped.shape[2],
-                        "pixels": clipped.tolist(),
-                        "transform": _t_struct(new_t),
-                        "crs": r["crs"],
-                        "nodata": int(r["nodata"]),
-                    }
+    def _clip(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i, r, pix in raster_rows(batch):
+                clipped, new_t = clip_to_bbox(pix, as_affine(r["transform"]), bbox)
+                yield raster_batch(
+                    row_keys(batch, i, "product_id", "bands"), clipped, new_t,
+                    r["crs"], r["nodata"],
                 )
-            yield pd.DataFrame(rows)
 
-    return stacked_df.mapInPandas(_clip, schema=STACK_SCHEMA)
+    return stacked_df.mapInArrow(_clip, schema=STACK_SCHEMA)
 
 
 def reproject_stacks(stacked_df: DataFrame, dst_crs: str = "epsg:4326") -> DataFrame:
-    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71), per-row.
+    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71), per-row
+    mapInArrow.
 
-    Source CRS 'epsg:326xx' (UTM north) uses the spherical TM inverse;
-    'epsg:4326' passes through with a no-op warp."""
+    Source CRS 'epsg:326xx' (UTM north) maps through the ellipsoidal
+    Krüger series (functions.proj); a raster already in ``dst_crs``
+    passes through unchanged."""
+    from etl_sentinel_imagery_spark.functions.proj import utm_forward
 
-    def _reproject(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                pix = _nested_to_np(r["pixels"], 3)
-                src_t = _affine(r)
+    def _reproject(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i, r, pix in raster_rows(batch):
+                keys = row_keys(batch, i, "product_id", "bands")
+                src_t = as_affine(r["transform"])
                 crs = str(r["crs"]).lower()
                 if crs == dst_crs:
-                    rows.append(r.to_dict())
+                    yield raster_batch(keys, pix, src_t, r["crs"], r["nodata"])
                     continue
                 if not crs.startswith("epsg:326"):
                     raise NotImplementedError(f"source CRS {crs}")
                 zone = int(crs[-2:])
-                inv = utm_inverse(zone)
-                from etl_sentinel_imagery_spark.functions.proj import (
-                    utm_forward,
-                )
-
-                fwd = utm_forward(zone)  # maps dst grid → src coords
-
                 dst_t, dst_shape = default_wgs84_grid(
-                    src_t, (pix.shape[1], pix.shape[2]), inv
+                    src_t, pix.shape[1:], utm_inverse(zone)
                 )
                 out = resample_nearest(
-                    pix, src_t, dst_t, dst_shape, inverse_coord_fn=fwd,
-                    nodata=int(r["nodata"]),
+                    pix, src_t, dst_t, dst_shape,
+                    inverse_coord_fn=utm_forward(zone),  # dst grid → src coords
+                    nodata=r["nodata"],
                 )
-                rows.append(
-                    {
-                        "product_id": r["product_id"],
-                        "bands": list(r["bands"]),
-                        "height": out.shape[1],
-                        "width": out.shape[2],
-                        "pixels": out.tolist(),
-                        "transform": _t_struct(dst_t),
-                        "crs": dst_crs,
-                        "nodata": int(r["nodata"]),
-                    }
-                )
-            yield pd.DataFrame(rows)
+                yield raster_batch(keys, out, dst_t, dst_crs, r["nodata"])
 
-    return stacked_df.mapInPandas(_reproject, schema=STACK_SCHEMA)
+    return stacked_df.mapInArrow(_reproject, schema=STACK_SCHEMA)
 
 
 def mosaic_stacks(stacked_df: DataFrame, mosaic_key: Column | None = None) -> DataFrame:
-    """R5: groupBy(key).applyInPandas, rows pre-sorted by product_id so
+    """R5: groupBy(key).applyInArrow, rows sorted by product_id so
     first-wins is deterministic regardless of shuffle arrival order
     (the explicit-sort-before-reduce mitigation from SURVEY.md §7)."""
     key = mosaic_key if mosaic_key is not None else F.lit("all")
@@ -362,27 +416,20 @@ def mosaic_stacks(stacked_df: DataFrame, mosaic_key: Column | None = None) -> Da
         "crs string, nodata int"
     )
 
-    def _mosaic(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("product_id", ignore_index=True)
-        rasters = [
-            (_nested_to_np(r["pixels"], 3), _affine(r))
-            for _, r in pdf.iterrows()
-        ]
-        nodata = int(pdf.iloc[0]["nodata"])
-        out, t = mosaic_first(rasters, nodata=nodata)
-        first = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                "mosaic_key": [first["mosaic_key"]],
-                "n_inputs": [len(pdf)],
-                "bands": [list(first["bands"])],
-                "height": [out.shape[1]],
-                "width": [out.shape[2]],
-                "pixels": [out.tolist()],
-                "transform": [_t_struct(t)],
-                "crs": [first["crs"]],
-                "nodata": [nodata],
-            }
+    def _mosaic(table: pa.Table) -> pa.Table:
+        rows = sorted(raster_rows(table), key=lambda r: r[1]["product_id"])
+        first = rows[0][1]
+        out, t = mosaic_first(
+            [(pix, as_affine(m["transform"])) for _, m, pix in rows],
+            nodata=first["nodata"],
+        )
+        keys = {
+            "mosaic_key": pa.array([first["mosaic_key"]], pa.string()),
+            "n_inputs": pa.array([len(rows)], pa.int32()),
+            "bands": pa.array([first["bands"]], pa.list_(pa.string())),
+        }
+        return pa.Table.from_batches(
+            [raster_batch(keys, out, t, first["crs"], first["nodata"])]
         )
 
-    return df.groupBy("mosaic_key").applyInPandas(_mosaic, schema=schema)
+    return df.groupBy("mosaic_key").applyInArrow(_mosaic, schema=schema)

@@ -2,10 +2,10 @@
 
 The codec (functions.geotiff) is pure numpy; this module is the
 distributed seam: stacked rasters gain a ``tif binary`` column, and tif
-bytes decode back to typed raster rows — both as Arrow-batched
-mapInPandas stages, so pixel payloads move executor-side in columnar
-batches and never round-trip through Python row objects. Mirrors the
-reference's file-based GTiff write/read cycle
+bytes decode back to typed raster rows — both as mapInArrow stages that
+move pixels through the operators.raster codec, so payloads stay Arrow
+buffers and never become Python objects. Mirrors the reference's
+file-based GTiff write/read cycle
 (`/root/reference/code/tx.py:28-34`, `dataset.py:54-59`) with bytes in
 the DataFrame instead of paths on a filesystem.
 """
@@ -15,14 +15,18 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from etl_sentinel_imagery_spark.functions.geotiff import (
     decode_geotiff,
     encode_geotiff,
 )
-from etl_sentinel_imagery_spark.operators.raster import STACK_SCHEMA
+from etl_sentinel_imagery_spark.operators.raster import (
+    STACK_SCHEMA,
+    raster_batch,
+    raster_rows,
+)
 
 
 def with_geotiff(stacked: DataFrame, dtype: str = "int32") -> DataFrame:
@@ -35,26 +39,15 @@ def with_geotiff(stacked: DataFrame, dtype: str = "int32") -> DataFrame:
         f"{f.name} {f.dataType.simpleString()}" for f in stacked.schema.fields
     ) + ", tif binary"
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tifs = []
-            for _, r in pdf.iterrows():
-                # Arrow delivers nested lists as object ndarrays of
-                # ndarrays — stack explicitly per band/row
-                arr = np.stack(
-                    [
-                        np.stack(
-                            [np.asarray(row, dtype=np_dtype) for row in band]
-                        )
-                        for band in r["pixels"]
-                    ]
-                )
-                tifs.append(
-                    encode_geotiff(arr, dict(r["transform"]), r["crs"], r["nodata"])
-                )
-            yield pdf.assign(tif=tifs)
+    def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            tifs = [
+                encode_geotiff(pix.astype(np_dtype), r["transform"], r["crs"], r["nodata"])
+                for _, r, pix in raster_rows(batch)
+            ]
+            yield batch.append_column("tif", pa.array(tifs, pa.binary()))
 
-    return stacked.mapInPandas(_encode, schema=out_schema)
+    return stacked.mapInArrow(_encode, schema=out_schema)
 
 
 def stacks_from_geotiff(
@@ -65,29 +58,20 @@ def stacks_from_geotiff(
     Band names are not stored in baseline TIFF tags; pass
     ``bands_by_id`` (or accept the positional b0..bN names)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
+    def _decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for r in batch.select([id_col, "tif"]).to_pylist():
                 arr, transform, crs, nodata = decode_geotiff(r["tif"])
                 names = (bands_by_id or {}).get(
                     r[id_col], [f"b{i}" for i in range(arr.shape[0])]
                 )
-                rows.append(
-                    {
-                        "product_id": r[id_col],
-                        "bands": list(names),
-                        "height": arr.shape[1],
-                        "width": arr.shape[2],
-                        "pixels": arr.astype("int32").tolist(),
-                        "transform": transform,
-                        "crs": crs,
-                        "nodata": 0 if nodata is None else nodata,
-                    }
-                )
-            yield pd.DataFrame(rows)
+                keys = {
+                    "product_id": pa.array([r[id_col]], pa.string()),
+                    "bands": pa.array([list(names)], pa.list_(pa.string())),
+                }
+                yield raster_batch(keys, arr, transform, crs, 0 if nodata is None else nodata)
 
-    return tifs.mapInPandas(_decode, schema=STACK_SCHEMA)
+    return tifs.mapInArrow(_decode, schema=STACK_SCHEMA)
 
 
 def write_cache_geotiff(stacked: DataFrame, cache_dir: str, dtype: str = "int32") -> None:

@@ -7,24 +7,25 @@ reference's *intended* semantics (its latent bugs fixed — SURVEY.md §2.9:
 positional-arg swap fixed).
 
 The downloader sits behind a source interface: tests use a deterministic
-synthetic source; a live deployment would plug an HTTP source running in
-``foreachPartition`` tasks with redirect-following chunked streaming and
+synthetic source; :class:`HttpBandSource` downloads inside executor
+tasks (sources.http_bands) with redirect-following chunked streaming and
 ``coalesce(4)`` honoring the reference's 4-connection quota
-(imagery_store.py:134-147, README.md:66). No network access exists in
-this environment, so the HTTP source raises NotImplementedError.
+(imagery_store.py:134-147, README.md:66).
 """
 
 from __future__ import annotations
 
 from typing import Protocol
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_sentinel_imagery_spark.operators.raster import (
     SINGLE_BAND_SCHEMA,
     clip_stacks,
-    normalize_pixels_col,
+    raster_batch,
     reproject_stacks,
     stack_bands,
 )
@@ -52,20 +53,18 @@ class SyntheticBandSource:
         self.height, self.width, self.crs = height, width, crs
 
     def fetch(self, spark: SparkSession, products: DataFrame, bands: list[str]) -> DataFrame:
-        rows = []
+        rc = np.arange(self.height)[:, None] * 13 + np.arange(self.width) * 7
+        batches = []
         for i, p in enumerate(sorted(r["uuid"] for r in products.select("uuid").collect())):
             for bi, band in enumerate(sorted(bands)):
                 base = (i * 37 + bi * 11) % 90
-                pixels = [
-                    [((base + r * 13 + c * 7) * 157) % 15000 for c in range(self.width)]
-                    for r in range(self.height)
-                ]
-                transform = {
-                    "a": 10.0, "b": 0.0, "c": 600000.0 + i * 40.0,
-                    "d": 0.0, "e": -10.0, "f": 4800000.0,
-                }
-                rows.append((p, band, self.height, self.width, pixels, transform, self.crs, 0))
-        return spark.createDataFrame(rows, schema=SINGLE_BAND_SCHEMA)
+                transform = (10.0, 0.0, 600000.0 + i * 40.0, 0.0, -10.0, 4800000.0)
+                keys = {"product_id": pa.array([p]), "band": pa.array([band])}
+                pixels = ((base + rc) * 157) % 15000
+                batches.append(raster_batch(keys, pixels, transform, self.crs, 0))
+        if not batches:
+            return spark.createDataFrame([], schema=SINGLE_BAND_SCHEMA)
+        return spark.createDataFrame(pa.Table.from_batches(batches), schema=SINGLE_BAND_SCHEMA)
 
 
 class HttpBandSource:
@@ -133,12 +132,9 @@ def etl_process_tile(
     band_rasters: DataFrame, normalize: bool = True, reproject_4326: bool = False
 ) -> DataFrame:
     """R6 (tx.py:110-120, intended semantics): stack(+normalize when
-    UINT8) → optional reproject. Normalize runs BEFORE the grouped stack
-    so it stays JVM-side column arithmetic on the narrow per-band rows."""
-    df = band_rasters
-    if normalize:
-        df = df.withColumn("pixels", normalize_pixels_col("pixels"))
-    stacked = stack_bands(df)
+    UINT8) → optional reproject. Normalize runs inside the stack kernel,
+    one band at a time, after the per-band rows cross the shuffle."""
+    stacked = stack_bands(band_rasters, normalize=normalize)
     if reproject_4326:
         stacked = reproject_stacks(stacked, "epsg:4326")
     return stacked
@@ -150,12 +146,9 @@ def etl_process_by_polygon(
     normalize: bool = True,
     reproject_4326: bool = False,
 ) -> DataFrame:
-    """R7 (tx.py:123-138, redundant double-stack dropped): stack → clip →
-    optional reproject."""
-    df = band_rasters
-    if normalize:
-        df = df.withColumn("pixels", normalize_pixels_col("pixels"))
-    stacked = clip_stacks(stack_bands(df), clip_bbox)
+    """R7 (tx.py:123-138, redundant double-stack dropped): stack(+normalize
+    inside the stack kernel) → clip → optional reproject."""
+    stacked = clip_stacks(stack_bands(band_rasters, normalize=normalize), clip_bbox)
     if reproject_4326:
         stacked = reproject_stacks(stacked, "epsg:4326")
     return stacked

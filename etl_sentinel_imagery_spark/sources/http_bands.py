@@ -8,11 +8,13 @@ note, imagery_store.py:45).
 
 Spark shape: the (product × band) task table is coalesced to the
 connection quota so at most 4 concurrent connections exist cluster-wide,
-then an Arrow-batched mapInPandas stage downloads and decodes inside the
-executor task. The token lifecycle is a per-partition TokenManager built
-from broadcast credentials (a driver-side manager cannot serve
-executors); a 401 triggers on_unauthorized() + one retry, mirroring the
-reference's rerun-token-access path. urllib-only (no requests in this
+then a mapInArrow stage downloads and decodes inside the executor task
+and hands each band to the JVM as an Arrow nested list built from the
+decoded numpy buffer (operators.raster.raster_batch). The token
+lifecycle is a per-partition TokenManager built from broadcast
+credentials (a driver-side manager cannot serve executors); a 401
+triggers on_unauthorized() + one retry, mirroring the reference's
+rerun-token-access path. urllib-only (no requests in this
 container); the decode step defaults to the pure-numpy GeoTIFF codec.
 """
 
@@ -23,7 +25,8 @@ import urllib.parse
 import urllib.request
 from typing import Callable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -126,9 +129,15 @@ def fetch_bands_http(
 
     ``url_for(uuid, band)`` builds each request URL (node_url for
     reference parity, anything for tests). ``decode`` maps payload bytes
-    to {height, width, pixels, transform, crs, nodata} — defaults to the
-    GeoTIFF codec. coalesce(quota) bounds cluster-wide connections."""
-    from etl_sentinel_imagery_spark.operators.raster import SINGLE_BAND_SCHEMA
+    to {height, width, pixels, transform, crs, nodata}, where ``pixels``
+    is a 2-D array (an ndarray or nested lists) and ``transform`` an
+    {a..f} mapping or a 6-sequence — it defaults to the GeoTIFF codec.
+    coalesce(quota) bounds cluster-wide connections."""
+    from etl_sentinel_imagery_spark.operators.raster import (
+        SINGLE_BAND_SCHEMA,
+        raster_batch,
+        row_keys,
+    )
 
     if decode is None:
         from etl_sentinel_imagery_spark.functions.geotiff import decode_geotiff
@@ -138,7 +147,7 @@ def fetch_bands_http(
             return {
                 "height": arr.shape[1],
                 "width": arr.shape[2],
-                "pixels": arr[0].astype("int32").tolist(),
+                "pixels": arr[0],
                 "transform": transform,
                 "crs": crs,
                 "nodata": 0 if nodata is None else nodata,
@@ -148,14 +157,21 @@ def fetch_bands_http(
         spark.createDataFrame([(b,) for b in sorted(bands)], "band string")
     )
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tm = token_manager_factory()  # one lifecycle per partition/task
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
+        for batch in batches:
+            for i, r in enumerate(batch.to_pylist()):
                 payload = download_band(url_for(r["product_id"], r["band"]), tm)
                 d = decode(payload)
-                rows.append({"product_id": r["product_id"], "band": r["band"], **d})
-            yield pd.DataFrame(rows)
+                pixels = np.asarray(d["pixels"], dtype=np.int32)
+                if pixels.shape != (d["height"], d["width"]):
+                    raise ValueError(
+                        f"{r['product_id']}/{r['band']}: decoded pixels have shape "
+                        f"{pixels.shape}, header says {d['height']}x{d['width']}"
+                    )
+                yield raster_batch(
+                    row_keys(batch, i, "product_id", "band"),
+                    pixels, d["transform"], d["crs"], d["nodata"],
+                )
 
-    return tasks.coalesce(quota).mapInPandas(_fetch, schema=SINGLE_BAND_SCHEMA)
+    return tasks.coalesce(quota).mapInArrow(_fetch, schema=SINGLE_BAND_SCHEMA)

@@ -1,7 +1,7 @@
 """MERGE / SCD2 emulation — cache maintenance without a lakehouse format.
 
 The reference's cache is overwrite-by-uuid files (`dataset.py:54`,
-tx.py:92-96); its Spark analogue (plans.acquisition.write_cache) is
+tx.py:92-96); its Spark analogue (operators.raster_io.write_cache) is
 dynamic partition overwrite. These operators add the two classic
 mutation patterns a plain-parquet pipeline needs when upstream rows
 CHANGE rather than just appear:

@@ -33,6 +33,8 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_sentinel_imagery_spark.functions.proj import utm_forward, utm_inverse
+
 Affine = tuple[float, float, float, float, float, float]
 
 #: Spark schema fragments for raster rows.
@@ -209,16 +211,6 @@ def mosaic_first(
     return out, (res_x, 0.0, minx, 0.0, res_y, maxy)
 
 
-# --- transverse mercator (UTM↔WGS84), ellipsoidal Krüger series -----------
-def utm_inverse(zone: int, northern: bool = True) -> Callable:
-    """Ellipsoidal UTM inverse (functions.proj Krüger series) — matches
-    PROJ to sub-millimeter within a zone, replacing the round-1
-    spherical stand-in (which was off by ~24 km in northing at 45°)."""
-    from etl_sentinel_imagery_spark.functions.proj import utm_inverse as _inv
-
-    return _inv(zone, northern)
-
-
 # =========================== Arrow codec =================================
 #: Arrow type of the ``transform`` struct column.
 TRANSFORM_ARROW = pa.struct([(k, pa.float64()) for k in "abcdef"])
@@ -317,23 +309,61 @@ def normalize_pixels_col(pixels: Column | str) -> Column:
     )
 
 
+def _map_rows(
+    stacked_df: DataFrame, kernel: Callable[[dict, np.ndarray], tuple]
+) -> DataFrame:
+    """The per-row stage skeleton (mapInArrow, no shuffle): decode each
+    STACK_SCHEMA row, run ``kernel(fields, pixels) → (pixels, transform,
+    crs)``, and emit the row with its keys and nodata unchanged."""
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i, r, pix in raster_rows(batch):
+                out, t, crs = kernel(r, pix)
+                yield raster_batch(
+                    row_keys(batch, i, "product_id", "bands"), out, t, crs, r["nodata"]
+                )
+
+    return stacked_df.mapInArrow(_run, schema=STACK_SCHEMA)
+
+
+def _reduce_groups(
+    df: DataFrame, key: str, order: str, schema: str,
+    kernel: Callable[[list[tuple[dict, np.ndarray]]], tuple],
+) -> DataFrame:
+    """The per-group stage skeleton (groupBy(key).applyInArrow): decode the
+    group's rows sorted by ``order`` (deterministic whatever the shuffle
+    arrival order), run ``kernel([(fields, pixels), …]) → (keys, pixels,
+    transform)``, and emit one row with the first row's crs and nodata."""
+
+    def _run(table: pa.Table) -> pa.Table:
+        rows = sorted(raster_rows(table), key=lambda r: r[1][order])
+        rows = [(m, pix) for _, m, pix in rows]
+        keys, out, t = kernel(rows)
+        first = rows[0][0]
+        return pa.Table.from_batches(
+            [raster_batch(keys, out, t, first["crs"], first["nodata"])]
+        )
+
+    return df.groupBy(key).applyInArrow(_run, schema=schema)
+
+
 _GEOMETRY = ("height", "width", "transform", "crs", "nodata")
 
 
 def stack_bands(single_band_df: DataFrame, normalize: bool = False) -> DataFrame:
-    """R3: groupBy(product).applyInArrow — collect a product's bands in
-    lexicographic band order (O4, imagery_store.py:67-68) into one
-    (bands, h, w) stack. ``normalize`` applies R1 (:func:`normalize_s2`)
-    one band at a time, so the float64 temporaries stay one band big.
+    """R3: collect a product's bands in lexicographic band order (O4,
+    imagery_store.py:67-68) into one (bands, h, w) stack. ``normalize``
+    applies R1 (:func:`normalize_s2`) one band at a time, so the float64
+    temporaries stay one band big.
 
     Every band must match the first on height, width, transform, crs and
     nodata; a mismatch raises ValueError naming the product and band."""
 
-    def _stack(table: pa.Table) -> pa.Table:
-        rows = sorted(raster_rows(table), key=lambda r: r[1]["band"])
-        first = rows[0][1]
+    def _stack(rows):
+        first = rows[0][0]
         out = np.empty((len(rows), first["height"], first["width"]), np.int32)
-        for k, (_, m, band) in enumerate(rows):
+        for k, (m, band) in enumerate(rows):
             bad = [f for f in _GEOMETRY if m[f] != first[f]]
             if bad or band.shape != out.shape[1:]:
                 raise ValueError(
@@ -344,92 +374,69 @@ def stack_bands(single_band_df: DataFrame, normalize: bool = False) -> DataFrame
             out[k] = normalize_s2(band) if normalize else band
         keys = {
             "product_id": pa.array([first["product_id"]], pa.string()),
-            "bands": pa.array([[m["band"] for _, m, _ in rows]], pa.list_(pa.string())),
+            "bands": pa.array([[m["band"] for m, _ in rows]], pa.list_(pa.string())),
         }
-        return pa.Table.from_batches(
-            [raster_batch(keys, out, first["transform"], first["crs"], first["nodata"])]
-        )
+        return keys, out, first["transform"]
 
-    return single_band_df.groupBy("product_id").applyInArrow(
-        _stack, schema=STACK_SCHEMA
-    )
+    return _reduce_groups(single_band_df, "product_id", "band", STACK_SCHEMA, _stack)
 
 
 def clip_stacks(stacked_df: DataFrame, bbox: tuple[float, float, float, float]) -> DataFrame:
-    """R2 over stacked products — per-row mapInArrow (no shuffle)."""
-
-    def _clip(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for i, r, pix in raster_rows(batch):
-                clipped, new_t = clip_to_bbox(pix, as_affine(r["transform"]), bbox)
-                yield raster_batch(
-                    row_keys(batch, i, "product_id", "bands"), clipped, new_t,
-                    r["crs"], r["nodata"],
-                )
-
-    return stacked_df.mapInArrow(_clip, schema=STACK_SCHEMA)
+    """R2 over stacked products, per row."""
+    return _map_rows(
+        stacked_df,
+        lambda r, pix: (*clip_to_bbox(pix, as_affine(r["transform"]), bbox), r["crs"]),
+    )
 
 
 def reproject_stacks(stacked_df: DataFrame, dst_crs: str = "epsg:4326") -> DataFrame:
-    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71), per-row
-    mapInArrow.
+    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71), per row.
 
     Source CRS 'epsg:326xx' (UTM north) maps through the ellipsoidal
     Krüger series (functions.proj); a raster already in ``dst_crs``
     passes through unchanged."""
-    from etl_sentinel_imagery_spark.functions.proj import utm_forward
 
-    def _reproject(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for i, r, pix in raster_rows(batch):
-                keys = row_keys(batch, i, "product_id", "bands")
-                src_t = as_affine(r["transform"])
-                crs = str(r["crs"]).lower()
-                if crs == dst_crs:
-                    yield raster_batch(keys, pix, src_t, r["crs"], r["nodata"])
-                    continue
-                if not crs.startswith("epsg:326"):
-                    raise NotImplementedError(f"source CRS {crs}")
-                zone = int(crs[-2:])
-                dst_t, dst_shape = default_wgs84_grid(
-                    src_t, pix.shape[1:], utm_inverse(zone)
-                )
-                out = resample_nearest(
-                    pix, src_t, dst_t, dst_shape,
-                    inverse_coord_fn=utm_forward(zone),  # dst grid → src coords
-                    nodata=r["nodata"],
-                )
-                yield raster_batch(keys, out, dst_t, dst_crs, r["nodata"])
+    def _reproject(r, pix):
+        src_t = as_affine(r["transform"])
+        crs = str(r["crs"]).lower()
+        if crs == dst_crs:
+            return pix, src_t, r["crs"]
+        if not crs.startswith("epsg:326"):
+            raise NotImplementedError(f"source CRS {crs}")
+        zone = int(crs[-2:])
+        dst_t, dst_shape = default_wgs84_grid(src_t, pix.shape[1:], utm_inverse(zone))
+        out = resample_nearest(
+            pix, src_t, dst_t, dst_shape,
+            inverse_coord_fn=utm_forward(zone),  # dst grid → src coords
+            nodata=r["nodata"],
+        )
+        return out, dst_t, dst_crs
 
-    return stacked_df.mapInArrow(_reproject, schema=STACK_SCHEMA)
+    return _map_rows(stacked_df, _reproject)
 
 
 def mosaic_stacks(stacked_df: DataFrame, mosaic_key: Column | None = None) -> DataFrame:
-    """R5: groupBy(key).applyInArrow, rows sorted by product_id so
+    """R5: first-wins mosaic per key, rows sorted by product_id so
     first-wins is deterministic regardless of shuffle arrival order
     (the explicit-sort-before-reduce mitigation from SURVEY.md §7)."""
     key = mosaic_key if mosaic_key is not None else F.lit("all")
-    df = stacked_df.withColumn("mosaic_key", key)
     schema = (
         "mosaic_key string, n_inputs int, bands array<string>, height int, "
         f"width int, pixels array<array<array<int>>>, transform {TRANSFORM_TYPE}, "
         "crs string, nodata int"
     )
 
-    def _mosaic(table: pa.Table) -> pa.Table:
-        rows = sorted(raster_rows(table), key=lambda r: r[1]["product_id"])
-        first = rows[0][1]
+    def _mosaic(rows):
+        first = rows[0][0]
         out, t = mosaic_first(
-            [(pix, as_affine(m["transform"])) for _, m, pix in rows],
-            nodata=first["nodata"],
+            [(pix, as_affine(m["transform"])) for m, pix in rows], nodata=first["nodata"]
         )
         keys = {
             "mosaic_key": pa.array([first["mosaic_key"]], pa.string()),
             "n_inputs": pa.array([len(rows)], pa.int32()),
             "bands": pa.array([first["bands"]], pa.list_(pa.string())),
         }
-        return pa.Table.from_batches(
-            [raster_batch(keys, out, t, first["crs"], first["nodata"])]
-        )
+        return keys, out, t
 
-    return df.groupBy("mosaic_key").applyInArrow(_mosaic, schema=schema)
+    df = stacked_df.withColumn("mosaic_key", key)
+    return _reduce_groups(df, "mosaic_key", "product_id", schema, _mosaic)

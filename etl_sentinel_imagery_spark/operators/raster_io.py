@@ -7,7 +7,8 @@ move pixels through the operators.raster codec, so payloads stay Arrow
 buffers and never become Python objects. Mirrors the reference's
 file-based GTiff write/read cycle
 (`/root/reference/code/tx.py:28-34`, `dataset.py:54-59`) with bytes in
-the DataFrame instead of paths on a filesystem.
+the DataFrame instead of paths on a filesystem. Both cache sinks (parquet
+rasters, GeoTIFF bytes) share one uuid-keyed writer, :func:`write_cache`.
 """
 
 from __future__ import annotations
@@ -74,16 +75,26 @@ def stacks_from_geotiff(
     return tifs.mapInArrow(_decode, schema=STACK_SCHEMA)
 
 
-def write_cache_geotiff(stacked: DataFrame, cache_dir: str, dtype: str = "int32") -> None:
-    """S8 sink: uuid-keyed GeoTIFF BYTES cache (the reference's
-    `{uuid}.tif` files, dataset.py:54), idempotent via dynamic partition
-    overwrite — re-running a product replaces exactly its own partition."""
+def write_cache(stacked: DataFrame, cache_dir: str) -> None:
+    """S9 (tx.py:92-96, dataset.py:54): idempotent uuid-keyed cache sink.
+
+    Parquet partitioned by uuid (the ``product_id`` column) with dynamic
+    partition overwrite — re-running a product replaces exactly its own
+    partition (the Spark analogue of overwriting `{uuid}.tif`)."""
     (
-        with_geotiff(stacked, dtype=dtype)
-        .withColumnRenamed("product_id", "uuid")
-        .select("uuid", "bands", "tif")
+        stacked.withColumnRenamed("product_id", "uuid")
         .write.mode("overwrite")
         .partitionBy("uuid")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(cache_dir)
+    )
+
+
+def write_cache_geotiff(stacked: DataFrame, cache_dir: str, dtype: str = "int32") -> None:
+    """S8 sink: the :func:`write_cache` layout holding GeoTIFF BYTES
+    (uuid, bands, tif) — the reference's `{uuid}.tif` files,
+    dataset.py:54."""
+    write_cache(
+        with_geotiff(stacked, dtype=dtype).select("product_id", "bands", "tif"),
+        cache_dir,
     )

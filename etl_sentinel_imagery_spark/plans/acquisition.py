@@ -4,7 +4,9 @@ The reference's end-to-end flow (`dataset.py:35-59` → `imagery_store.py:
 37-77` → `tx.py:110-138`), composed from the engine's operators with the
 reference's *intended* semantics (its latent bugs fixed — SURVEY.md §2.9:
 `etl_process` → `etl_process_tile`, the double band_stack call dropped,
-positional-arg swap fixed).
+positional-arg swap fixed). One composition, :func:`etl_process_tile`,
+serves both the tile (R6) and the polygon (R7) path; both cache formats
+go through the one keyed writer in operators.raster_io.
 
 The downloader sits behind a source interface: tests use a deterministic
 synthetic source; :class:`HttpBandSource` downloads inside executor
@@ -15,12 +17,12 @@ tasks (sources.http_bands) with redirect-following chunked streaming and
 
 from __future__ import annotations
 
+import functools
 from typing import Protocol
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_sentinel_imagery_spark.operators.raster import (
     SINGLE_BAND_SCHEMA,
@@ -29,8 +31,13 @@ from etl_sentinel_imagery_spark.operators.raster import (
     reproject_stacks,
     stack_bands,
 )
+from etl_sentinel_imagery_spark.operators.raster_io import (
+    write_cache,
+    write_cache_geotiff,
+)
 from etl_sentinel_imagery_spark.operators.selection import (
     best_product_direct,
+    covering,
     filter_products,
     with_coverage_ratio,
 )
@@ -80,8 +87,6 @@ class HttpBandSource:
         self.base_url, self.token_url = base_url, token_url
 
     def fetch(self, spark: SparkSession, products: DataFrame, bands: list[str]) -> DataFrame:
-        import functools
-
         from etl_sentinel_imagery_spark.sources.http_bands import (
             fetch_bands_http,
             make_token_manager,
@@ -110,8 +115,8 @@ def select_product(
 
     The by-AOI path applies the spatial Intersects predicate (P7,
     imagery_store.py:185) — products disjoint from the AOI never reach
-    ranking, so an off-catalog AOI yields an empty selection rather than
-    a zero-coverage 'winner'."""
+    ranking, so an off-catalog or zero-area AOI yields an empty selection
+    rather than a zero-coverage 'winner'."""
     filtered = filter_products(
         catalog,
         params["platform"],
@@ -121,52 +126,27 @@ def select_product(
         params["cloud_max"],
         tile_id=tile_id,
     )
-    with_ratio = with_coverage_ratio(filtered, aoi_bbox).filter(
-        F.col("area_ratio") > 0.0
-    )
     # top-1 via TakeOrderedAndProject — no full ranking materialized
-    return best_product_direct(with_ratio, bands)
+    return best_product_direct(covering(with_coverage_ratio(filtered, aoi_bbox)), bands)
 
 
 def etl_process_tile(
-    band_rasters: DataFrame, normalize: bool = True, reproject_4326: bool = False
-) -> DataFrame:
-    """R6 (tx.py:110-120, intended semantics): stack(+normalize when
-    UINT8) → optional reproject. Normalize runs inside the stack kernel,
-    one band at a time, after the per-band rows cross the shuffle."""
-    stacked = stack_bands(band_rasters, normalize=normalize)
-    if reproject_4326:
-        stacked = reproject_stacks(stacked, "epsg:4326")
-    return stacked
-
-
-def etl_process_by_polygon(
     band_rasters: DataFrame,
-    clip_bbox: tuple[float, float, float, float],
     normalize: bool = True,
     reproject_4326: bool = False,
+    clip_bbox: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """R7 (tx.py:123-138, redundant double-stack dropped): stack(+normalize
-    inside the stack kernel) → clip → optional reproject."""
-    stacked = clip_stacks(stack_bands(band_rasters, normalize=normalize), clip_bbox)
+    """R6/R7 (tx.py:110-138, intended semantics): stack(+normalize) →
+    clip to ``clip_bbox`` when given (R7's polygon path, its redundant
+    double stack dropped) → optional reproject. Normalize runs inside the
+    stack kernel, one band at a time, after the per-band rows cross the
+    shuffle."""
+    stacked = stack_bands(band_rasters, normalize=normalize)
+    if clip_bbox is not None:
+        stacked = clip_stacks(stacked, clip_bbox)
     if reproject_4326:
         stacked = reproject_stacks(stacked, "epsg:4326")
     return stacked
-
-
-def write_cache(stacked: DataFrame, cache_dir: str) -> None:
-    """S9 (tx.py:92-96, dataset.py:54): idempotent uuid-keyed cache sink.
-
-    Parquet partitioned by product_id with dynamic partition overwrite —
-    re-running a product replaces exactly its own partition (the Spark
-    analogue of overwriting `{uuid}.tif`)."""
-    (
-        stacked.withColumnRenamed("product_id", "uuid")
-        .write.mode("overwrite")
-        .partitionBy("uuid")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(cache_dir)
-    )
 
 
 def acquire(
@@ -187,29 +167,26 @@ def acquire(
     ``clip_bbox`` must be expressed in the RASTER's CRS (the reference
     reprojects the AOI into the product CRS before masking). Early
     bail-out (P11, imagery_store.py:59): empty selection short-circuits
-    before any fetch work is scheduled."""
+    before any fetch work is scheduled. ``cache_format`` is "parquet" or
+    "geotiff" (the reference's ``{uuid}.tif`` cache, dataset.py:54, as
+    bytes); any other value raises ValueError before any Spark job."""
+    sinks = {
+        "parquet": write_cache,
+        "geotiff": functools.partial(
+            write_cache_geotiff, dtype="uint8" if normalize else "int32"
+        ),
+    }
+    if cache_format not in sinks:
+        raise ValueError(
+            f"unknown cache_format {cache_format!r}; expected one of {sorted(sinks)}"
+        )
     product = select_product(catalog, aoi_bbox, params, bands)
     if product.isEmpty():
         return product
     rasters = source.fetch(spark, product, bands)
-    if clip_bbox is not None:
-        stacked = etl_process_by_polygon(
-            rasters, clip_bbox, normalize=normalize, reproject_4326=reproject_4326
-        )
-    else:
-        stacked = etl_process_tile(
-            rasters, normalize=normalize, reproject_4326=reproject_4326
-        )
+    stacked = etl_process_tile(
+        rasters, normalize=normalize, reproject_4326=reproject_4326, clip_bbox=clip_bbox
+    )
     if cache_dir is not None:
-        if cache_format == "geotiff":
-            # the reference's {uuid}.tif cache (dataset.py:54) as bytes
-            from etl_sentinel_imagery_spark.operators.raster_io import (
-                write_cache_geotiff,
-            )
-
-            write_cache_geotiff(
-                stacked, cache_dir, dtype="uint8" if normalize else "int32"
-            )
-        else:
-            write_cache(stacked, cache_dir)
+        sinks[cache_format](stacked, cache_dir)
     return stacked

@@ -23,11 +23,11 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_sentinel_imagery_spark.operators.raster_io import write_cache
 from etl_sentinel_imagery_spark.plans.acquisition import (
     BandSource,
     acquire,
     etl_process_tile,
-    write_cache,
 )
 from etl_sentinel_imagery_spark.operators.selection import (
     filter_products,
@@ -68,20 +68,12 @@ def run_joined(
 
     Returns ``(selection, stacked)``: the per-AOI winner table
     (fid → product record) and the ETL'd rasters of the distinct winning
-    products. AOIs that intersect nothing simply don't appear in
-    ``selection`` — no empty-guard loop needed."""
+    products. AOIs that intersect nothing (or have zero area) simply
+    don't appear in ``selection`` — no empty-guard loop needed."""
     if config.aoi_path is None:
         raise ValueError("config.aoi_path is required")
     aois = read_aoi(spark, config.aoi_path)
-    p = config.selection_params()
-    filtered = filter_products(
-        catalog,
-        p["platform"],
-        p["product_type"],
-        p["date_start"],
-        p["date_end"],
-        p["cloud_max"],
-    )
+    filtered = filter_products(catalog, **config.selection_params())
     selection = select_best_per_aoi(filtered, aois)
     winners = selection.select("uuid").distinct()
     rasters = source.fetch(spark, winners, config.bands)

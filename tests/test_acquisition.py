@@ -4,6 +4,7 @@ selection → synthetic fetch → Tx composition → keyed cache."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from etl_sentinel_imagery_spark.operators.raster import normalize_s2
 from etl_sentinel_imagery_spark.plans.acquisition import (
@@ -73,6 +74,38 @@ def test_empty_selection_bails_out(spark):
         SyntheticBandSource(),
     )
     assert out.isEmpty()
+
+
+def test_zero_area_aoi_selects_nothing(spark):
+    """A zero-width or zero-height AOI box covers nothing: the selection is
+    empty, like an off-catalog AOI, and acquire bails out empty instead of
+    raising DIVIDE_BY_ZERO."""
+    for bbox in [(1.5, 43.25, 1.5, 43.75), (1.25, 43.5, 1.75, 43.5)]:
+        assert select_product(catalog_df(spark), bbox, SELECT_PARAMS, BANDS).isEmpty()
+        out = acquire(
+            spark, catalog_df(spark), bbox, SELECT_PARAMS, BANDS, SyntheticBandSource()
+        )
+        assert out.isEmpty()
+
+
+def test_unknown_cache_format_rejected_before_any_job(spark, tmp_path):
+    """A typo such as 'tif' must not silently write parquet: acquire raises
+    before it schedules a single Spark job."""
+    sc = spark.sparkContext
+    group = "unknown-cache-format"
+    sc.setJobGroup(group, "acquire with an unknown cache_format")
+    try:
+        with pytest.raises(ValueError, match="cache_format 'tif'"):
+            acquire(
+                spark, catalog_df(spark), AOI_BBOX, SELECT_PARAMS, BANDS,
+                SyntheticBandSource(), cache_dir=str(tmp_path / "c"), cache_format="tif",
+            )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        catalog_df(spark).count()  # the group does record jobs
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not (tmp_path / "c").exists()
 
 
 def test_acquire_tile_path_stack_and_normalize(spark, tmp_path):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import logging
 
 from etl_sentinel_imagery_spark.plans.acquisition import SyntheticBandSource
 from etl_sentinel_imagery_spark.plans.main import run, run_joined
@@ -10,7 +11,8 @@ from etl_sentinel_imagery_spark.sources.config import AcquisitionConfig
 from etl_sentinel_imagery_spark.sources.catalog_fixture import catalog_df
 
 
-def _write_aoi(tmp_path) -> str:
+def _write_aoi(tmp_path, second=(30.0, 10.0, 30.5, 10.5)) -> str:
+    x0, y0, x1, y1 = second
     fc = {
         "type": "FeatureCollection",
         "features": [
@@ -25,14 +27,13 @@ def _write_aoi(tmp_path) -> str:
                     ],
                 },
             },
-            {  # AOI with zero coverage → empty selection, tolerated
+            {  # by default zero coverage → empty selection, tolerated
                 "type": "Feature",
                 "properties": {"fid": 2},
                 "geometry": {
                     "type": "Polygon",
                     "coordinates": [
-                        [[30.0, 10.0], [30.5, 10.0], [30.5, 10.5],
-                         [30.0, 10.5], [30.0, 10.0]]
+                        [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
                     ],
                 },
             },
@@ -79,3 +80,32 @@ def test_run_batch_over_aoi_file(spark, tmp_path):
     assert results[1].isEmpty()  # off-catalog AOI bails out empty, no raise
     cached = spark.read.parquet(cache)
     assert cached.select("uuid").distinct().count() == 1
+
+
+class _FailingSource(SyntheticBandSource):
+    """Raises for one product's bands, as a band-server outage would."""
+
+    def __init__(self, bad: str):
+        super().__init__(height=4, width=4)
+        self.bad = bad
+
+    def fetch(self, spark, products, bands):
+        if self.bad in [r["uuid"] for r in products.select("uuid").collect()]:
+            raise OSError(f"band server down for {self.bad}")
+        return super().fetch(spark, products, bands)
+
+
+def test_run_isolates_a_failing_aoi(spark, tmp_path, caplog):
+    """run's reason to exist: the AOI whose bands cannot be fetched (fid 2,
+    winner p-tdj-2) is logged and skipped, and the other AOI's result
+    still comes back, without raising."""
+    cfg = AcquisitionConfig(aoi_path=_write_aoi(tmp_path, (2.25, 43.25, 2.75, 43.75)))
+    with caplog.at_level(logging.ERROR, logger="etl_sentinel_imagery_spark.plans.main"):
+        results = run(
+            spark, cfg, catalog_df(spark), _FailingSource("p-tdj-2"),
+            cache_dir=str(tmp_path / "cache"),
+        )
+    assert [[r["product_id"] for r in res.collect()] for res in results] == [["p-full"]]
+    failures = [r for r in caplog.records if "fid=2 failed" in r.getMessage()]
+    assert len(failures) == 1
+    assert "band server down for p-tdj-2" in str(failures[0].exc_info[1])

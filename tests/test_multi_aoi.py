@@ -14,6 +14,7 @@ from etl_sentinel_imagery_spark.operators.selection import (
     filter_products,
     select_best_per_aoi,
 )
+from etl_sentinel_imagery_spark.plans.acquisition import select_product
 from etl_sentinel_imagery_spark.sources.catalog_fixture import (
     AOI,
     SELECT_PARAMS,
@@ -21,12 +22,14 @@ from etl_sentinel_imagery_spark.sources.catalog_fixture import (
 )
 
 
-def _aoi_df(spark):
-    rows = [
-        (1, AOI["minx"], AOI["miny"], AOI["maxx"], AOI["maxy"]),  # Toulouse box
-        (2, 2.25, 43.25, 2.75, 43.75),  # inside tile 31TDJ only
-        (3, 60.0, 10.0, 61.0, 11.0),  # off-catalog: no products intersect
-    ]
+_AOIS = [
+    (1, AOI["minx"], AOI["miny"], AOI["maxx"], AOI["maxy"]),  # Toulouse box
+    (2, 2.25, 43.25, 2.75, 43.75),  # inside tile 31TDJ only
+    (3, 60.0, 10.0, 61.0, 11.0),  # off-catalog: no products intersect
+]
+
+
+def _aoi_df(spark, rows=_AOIS):
     return spark.createDataFrame(
         rows, "fid int, minx double, miny double, maxx double, maxy double"
     ).select(
@@ -38,8 +41,8 @@ def _aoi_df(spark):
     )
 
 
-def test_joined_selection_matches_per_aoi_loop(spark):
-    cat = filter_products(
+def _filtered(spark):
+    return filter_products(
         catalog_df(spark),
         SELECT_PARAMS["platform"],
         SELECT_PARAMS["product_type"],
@@ -47,7 +50,13 @@ def test_joined_selection_matches_per_aoi_loop(spark):
         SELECT_PARAMS["date_end"],
         SELECT_PARAMS["cloud_max"],
     )
-    got = {r["fid"]: r for r in select_best_per_aoi(cat, _aoi_df(spark)).collect()}
+
+
+def test_joined_selection_matches_per_aoi_loop(spark):
+    got = {
+        r["fid"]: r
+        for r in select_best_per_aoi(_filtered(spark), _aoi_df(spark)).collect()
+    }
     # AOI 1: p-full wins with full coverage (same winner as the loop path)
     assert got[1]["uuid"] == "p-full"
     assert got[1]["area_ratio"] == 1.0
@@ -57,6 +66,22 @@ def test_joined_selection_matches_per_aoi_loop(spark):
     assert got[2]["area_ratio"] == 1.0
     # AOI 3: intersects nothing — absent (bbox join filtered it out)
     assert 3 not in got
+    # the per-AOI loop's plan (select_product) agrees AOI by AOI: same
+    # uuid and area_ratio, and the off-catalog AOI 3 is empty there too
+    for fid, *bbox in _AOIS:
+        loop = select_product(catalog_df(spark), tuple(bbox), SELECT_PARAMS, ["B02"])
+        want = [(got[fid]["uuid"], got[fid]["area_ratio"])] if fid in got else []
+        assert [(r["uuid"], r["area_ratio"]) for r in loop.collect()] == want
+
+
+def test_zero_area_aoi_gets_no_winner_in_joined_plan(spark):
+    """A zero-width or zero-height AOI box has no coverage ratio: the
+    joined plan gives it no row, like an off-catalog AOI, and still
+    resolves the other AOIs (rather than failing the whole batch with
+    DIVIDE_BY_ZERO)."""
+    rows = [_AOIS[0], (4, 1.5, 43.25, 1.5, 43.75), (5, 1.25, 43.5, 1.75, 43.5)]
+    got = select_best_per_aoi(_filtered(spark), _aoi_df(spark, rows)).collect()
+    assert [(r["fid"], r["uuid"], r["area_ratio"]) for r in got] == [(1, "p-full", 1.0)]
 
 
 def test_exact_overlay_non_axis_aligned():

@@ -4,10 +4,8 @@ The daily-ingest deployment of MinHash-LSH: a 100 TB corpus is deduped
 once (``operators.dedup``), its band table and signatures persist, and
 every subsequent batch — hours of crawl, not the whole corpus — dedups
 against that index WITHOUT recomputing a single signature of the
-existing corpus. The streaming sibling (``streaming.dedup_stream``)
-keeps LSH state in a stateful operator; this module is the batch twin
-whose state is a plain parquet layout, so any engine (and the
-transaction log) can own it.
+existing corpus. Its state is a plain parquet layout, so any engine
+(and the transaction log) can own it.
 
 Index layout under ``index_dir``::
 

@@ -381,36 +381,52 @@ def _stats_dir(path: str) -> str:
     return path + "/_bucket_stats"
 
 
-def _read_bucket_stats(spark, path: str) -> DataFrame:
-    """Resolve the committed stats version via the pointer file (with a
-    legacy fallback to a bare parquet directory)."""
-    import os
-
+def _current_stats_dir(spark, path: str) -> str:
+    """The committed stats version named by the ``_CURRENT`` pointer,
+    or the bare sidecar directory (legacy layout, no pointer). A local
+    directory reads the pointer with plain file IO; any other path (a
+    ``file:`` or cluster URI) reads it through the Hadoop FileSystem
+    API (Spark's file sources skip ``_``-prefixed files)."""
     sdir = _stats_dir(path)
-    ptr = os.path.join(sdir, "_CURRENT")
-    if os.path.isfile(ptr):
+    ptr = sdir + "/_CURRENT"
+    if os.path.isdir(sdir):
+        if not os.path.isfile(ptr):
+            return sdir
         with open(ptr) as f:
-            return spark.read.parquet(os.path.join(sdir, f.read().strip()))
-    return spark.read.parquet(sdir)
+            return sdir + "/" + f.read().strip()
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(ptr)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return sdir
+    stream = fs.open(hpath)
+    try:
+        name = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return sdir + "/" + name.strip()
 
 
-def _read_bucket_stats_rows(path: str) -> list[dict]:
+def _read_bucket_stats(spark, path: str) -> DataFrame:
+    """The committed stats version (see :func:`_current_stats_dir`)."""
+    return spark.read.parquet(_current_stats_dir(spark, path))
+
+
+def _read_bucket_stats_rows(spark, path: str) -> list[dict]:
     """The sidecar as driver-side rows: it is n_centroids-bounded by
     construction and every consumer that needs it driver-side
     (the adaptive probe's radius table) paid a full Spark job +
     planning pass to collect one tiny file (round 13, guide §5 — the
-    driver mirror of the driver-side stats COMMIT). Same pointer
-    resolution as :func:`_read_bucket_stats`."""
+    driver mirror of the driver-side stats COMMIT). A path that is not
+    a local directory falls back to the Spark read."""
     import glob
-    import os
 
     import pyarrow.parquet as _pq
 
-    sdir = _stats_dir(path)
-    ptr = os.path.join(sdir, "_CURRENT")
-    if os.path.isfile(ptr):
-        with open(ptr) as f:
-            sdir = os.path.join(sdir, f.read().strip())
+    if not os.path.isdir(_stats_dir(path)):
+        return [r.asDict() for r in _read_bucket_stats(spark, path).collect()]
+    sdir = _current_stats_dir(spark, path)
     files = sorted(
         p
         for p in glob.glob(os.path.join(sdir, "*.parquet"))
@@ -421,12 +437,11 @@ def _read_bucket_stats_rows(path: str) -> list[dict]:
 
 
 def _commit_bucket_stats(stats, path: str) -> None:
-    """Versioned-dir + atomic pointer-replace commit (the same protocol
-    as streaming.sketch_stream): a crash at any point leaves the
-    pointer naming a COMPLETE version — no window where the sidecar is
-    missing or half-written. ``stats``: a (bucket, n_members, min_cos)
-    DataFrame, or pre-collected rows (dicts/Rows) for callers that
-    already hold them driver-side."""
+    """Versioned-dir + atomic pointer-replace commit: a crash at any
+    point leaves the pointer naming a COMPLETE version — no window
+    where the sidecar is missing or half-written. ``stats``: a
+    (bucket, n_members, min_cos) DataFrame, or pre-collected rows
+    (dicts/Rows) for callers that already hold them driver-side."""
     import os
     import shutil
     import uuid
@@ -930,7 +945,7 @@ def ivf_topk_indexed_adaptive(
     # driver-side read of the n_centroids-bounded sidecar — the old
     # spark.read + collect paid a planning pass and a scheduled job
     # for one tiny file on every probe (round 13)
-    stats_rows = _read_bucket_stats_rows(index_path)
+    stats_rows = _read_bucket_stats_rows(spark, index_path)
     radius = np.zeros(len(cent_normed))
     for r in stats_rows:
         radius[int(r["bucket"])] = math.acos(

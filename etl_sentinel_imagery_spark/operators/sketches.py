@@ -460,9 +460,8 @@ def cm_sketch(
     × w counters). Point-queries any key's frequency (``cm_estimate``)
     with a one-sided guarantee: estimate ≥ true count, and
     ≤ true + (e/w)·N with probability 1 − e^(−d) — the classic
-    turnstile frequency sketch, complementing HLL (distinct), top-k
-    (heavy hitters with identities) and KLL (quantiles) in the rollup
-    family.
+    turnstile frequency sketch, complementing HLL (distinct) and top-k
+    (heavy hitters with identities) in the rollup family.
 
     Build shape mirrors the bloom/HLL builders: each input row explodes
     to d (row, cell) increments, the per-(group,row,cell) sum is

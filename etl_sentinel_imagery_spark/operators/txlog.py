@@ -2,10 +2,10 @@
 deletes (copy-on-write AND merge-on-read deletion vectors), and
 compaction over plain parquet.
 
-The engine's maintenance ops (compaction, targeted delete) use a
-crash-ordered swap that is safe but exposes a TRANSIENT WINDOW where a
-directory-listing reader sees old+new files together (documented in
-operators.maintenance). The lake-format answer (Delta/Iceberg) is a
+In-place maintenance of a plain parquet directory (compaction,
+targeted delete) needs a crash-ordered swap that is safe but exposes a
+TRANSIENT WINDOW where a directory-listing reader sees old+new files
+together. The lake-format answer (Delta/Iceberg) is a
 manifest log: the set of live files is a VERSIONED JSON manifest, the
 current version is an atomic pointer, and readers resolve the file
 list from a manifest — so every reader sees exactly one committed
@@ -50,6 +50,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_sentinel_imagery_spark.overlap import overlap
 
 
 class TxConflict(RuntimeError):
@@ -3054,15 +3056,9 @@ def update_rows(
                 spark, table_dir, updated, stat_cols, partition_cols
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_dv = pool.submit(
-                _write_dv_sidecar, spark, table_dir, hits
-            )
-            f_img = pool.submit(_img_leg)
-            sidecar, per_file = f_dv.result()
-            new_names = f_img.result()
+        (sidecar, per_file), new_names = overlap(
+            spark, lambda: _write_dv_sidecar(spark, table_dir, hits), _img_leg
+        )
         if sidecar is None:
             # nothing matched: the image write produced only empty
             # part files, already dropped by _move_in_data_files'
@@ -3530,8 +3526,6 @@ def _merge_once(
     # first's stage tail (optimization guide §2.6); results and commit
     # ordering are unchanged (both land before anything references
     # them)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _matched_ckpt():
         if not probe:
             return None
@@ -3560,11 +3554,7 @@ def _merge_once(
             unmatched, when_not_matched_by_source
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_tagged = pool.submit(_matched_ckpt)
-        f_bs = pool.submit(_bysource_ckpt)
-        tagged = f_tagged.result()
-        bs_tagged = f_bs.result()
+    tagged, bs_tagged = overlap(spark, _matched_ckpt, _bysource_ckpt)
 
     if tagged is not None:
         matched_keys = tagged.select(
@@ -3761,11 +3751,9 @@ def _merge_once(
                 e["rid"] = True
         return entries_out, wm
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dv = pool.submit(_dv_leg)
-        f_img = pool.submit(_img_leg)
-        removes, dv_adds = f_dv.result()
-        new_names, rid_wm = f_img.result()
+    (removes, dv_adds), (new_names, rid_wm) = overlap(
+        spark, _dv_leg, _img_leg
+    )
     if not new_names and not removes and not dv_adds:
         return parent  # every clause filtered to nothing: no-op
     return _try_commit_merge(

@@ -231,8 +231,7 @@ def curate_corpus(
 ) -> dict:
     """Run the full curation pipeline; write ``documents/`` (partitioned
     by split) and ``chunks/`` under ``out_dir``; return the stage-count
-    report. ``docs`` must be (doc_id, lang, text)-shaped (see
-    sources.jsonl for the ingest path)."""
+    report. ``docs`` must be (doc_id, lang, text)-shaped."""
     cfg = cfg or CurationConfig()
     report: dict = {}
 

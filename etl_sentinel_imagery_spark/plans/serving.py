@@ -315,12 +315,8 @@ def topk(
         hmeta = _read_hnsw_meta(index_dir)
         if hmeta is None:
             # legacy index built before the meta existed: recover the
-            # modulus from the persisted layout (partition-column-only
-            # scan — metadata-cheap), same fallback as the sync path
-            hmeta = {
-                "n_shards": graph.select("shard").distinct().count()
-                or DEFAULT_SHARDS
-            }
+            # modulus from the persisted layout, as the sync path does
+            hmeta = {"n_shards": _legacy_shard_modulus(graph)}
         short = hnsw_topk(
             vecs,
             graph,
@@ -414,6 +410,16 @@ def _write_hnsw_meta(index_dir: str, meta: dict) -> None:
     os.replace(tmp, _hnsw_meta_path(index_dir))
 
 
+def _legacy_shard_modulus(graph: DataFrame) -> int:
+    """The build's shard count for a graph persisted before the HNSW
+    meta existed: the highest shard id + 1 (partition-column-only scan,
+    metadata-cheap). A shard that hashed empty leaves no rows, so a
+    distinct count would undercount; only an empty TOP shard still
+    does."""
+    top = graph.agg(F.max("shard")).first()[0]
+    return DEFAULT_SHARDS if top is None else int(top) + 1
+
+
 def _persist_graph_versioned(graph, path: str) -> None:
     """Write a graph generation as NEW files, then one atomic manifest
     flip (the txlog repoint discipline): a concurrent reader sees the
@@ -461,25 +467,12 @@ def build_index_from_table(
         **build_kwargs,
     )
     if build_kwargs.get("hnsw", True):
-        from etl_sentinel_imagery_spark.operators.hnsw import (
-            DEFAULT_SHARDS,
-        )
-
         # versioned repoint for the freshly-built graph too, so the
         # first sync's readers already resolve through the manifest
+        # (build_serving_index already wrote the HNSW meta)
         publish_layout_manifest(
             _hnsw_dir(index_dir),
             list_layout_data_files(_hnsw_dir(index_dir)),
-        )
-        _write_hnsw_meta(
-            index_dir,
-            {
-                "n_shards": int(
-                    build_kwargs.get("hnsw_shards", DEFAULT_SHARDS)
-                ),
-                "built_nodes": snap.count(),
-                "churn": 0,
-            },
         )
     if build_kwargs.get("pq", False):
         _write_pq_meta(
@@ -822,7 +815,6 @@ def _sync_hnsw_tier(
     (:func:`_persist_graph_versioned`) — concurrent readers see old
     or new, never a mix."""
     from etl_sentinel_imagery_spark.operators.hnsw import (
-        DEFAULT_SHARDS,
         hnsw_append,
         hnsw_remove,
     )
@@ -835,8 +827,7 @@ def _sync_hnsw_tier(
     meta = _read_hnsw_meta(index_dir)
     if meta is None:  # legacy graph built before maintenance existed
         meta = {
-            "n_shards": graph.select("shard").distinct().count()
-            or DEFAULT_SHARDS,
+            "n_shards": _legacy_shard_modulus(graph),
             "built_nodes": graph.filter(F.col("level") == 0).count(),
             "churn": 0,
         }

@@ -42,6 +42,7 @@ from etl_sentinel_imagery_spark.operators.dedup import (
 from etl_sentinel_imagery_spark.operators.substring_dedup import (
     duplicated_span_table_dual,
 )
+from etl_sentinel_imagery_spark.overlap import overlap
 from etl_sentinel_imagery_spark.queries.base import Q
 from etl_sentinel_imagery_spark.sources.tables import load_table
 
@@ -105,10 +106,10 @@ def _text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full per-document analysis pass in ONE narrow projection:
     quality stats + score, stopword-ratio language guess, BPE-ish regex
     token counts, the binary-payload hashes (byte length, sha256,
-    md5 — the opaque-media-column plumbing of operators.multimodal at its
-    oracle-checkable core), the training-data hygiene columns (PII
-    match count, scrubbed-text and normalized-text content hashes), and
-    the deterministic train/val/test assignment + 10% sample membership
+    md5 — opaque-media-column plumbing at its oracle-checkable core),
+    the training-data hygiene columns (PII match count, scrubbed-text
+    and normalized-text content hashes), and the deterministic
+    train/val/test assignment + 10% sample membership
     (operators.sampling hash buckets — reproducible across engines and
     cluster sizes). One scan, no shuffle, all JVM-side — plus, joined on
     at the end, the sequence-packing placement columns from
@@ -1257,7 +1258,6 @@ def _incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     components for the within-batch tier. Integer/hash arithmetic
     end to end — no float in any comparison."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from etl_sentinel_imagery_spark.operators.incremental_dedup import (
         _sig_table,
@@ -1278,12 +1278,13 @@ def _incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job's tasks now back-fill executors the first one's tail frees.
     # Spark's scheduler handles concurrent driver threads natively;
     # the probe below starts only after BOTH complete.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(build_signature_index, old, idx)
-        sigs = _sig_table(new, "doc_id", "text", N_PERM).localCheckpoint(
+    _, sigs = overlap(
+        spark,
+        lambda: build_signature_index(old, idx),
+        lambda: _sig_table(new, "doc_id", "text", N_PERM).localCheckpoint(
             eager=True
-        )
-        fut.result()
+        ),
+    )
     out = incremental_dedup(new, idx, append=False, sigs=sigs)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -20,6 +20,7 @@ from etl_sentinel_imagery_spark.operators.similarity import (
     ivf_topk,
     l2_norm_sq,
 )
+from etl_sentinel_imagery_spark.overlap import overlap
 from etl_sentinel_imagery_spark.queries.base import Q
 from etl_sentinel_imagery_spark.sources.tables import load_table
 
@@ -435,76 +436,72 @@ def _ann_deterministic_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # the certified leg's construction is EAGER (twin-corpus
     # checkpoint, anchor collect, persisted index build+stats) and
-    # independent of every other leg once `normed` lands — run it on a
-    # driver thread so the int8 leg's amax collect and the remaining
-    # lazy plan-building overlap it instead of queueing behind it
-    # (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    cert_fut = pool.submit(
-        _certified_leg, spark, sf_dir, emb, tag, normed
-    )
-    cand = normed.select(
-        F.col("vid").alias("cand_id"), F.col("vn").alias("cand_vec")
-    )
-    qry = normed.filter(F.col("vid") < N_QUERIES).select(
-        F.col("vid").alias("query_id"), F.col("vn").alias("query_vec")
-    )
-    bw = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("cand_id")
-    )
-    brute_df = (
-        cand.join(F.broadcast(qry))
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            dot(F.col("query_vec"), F.col("cand_vec")).alias("cos_sim"),
+    # independent of every other leg once `normed` lands — overlap it
+    # with the int8 leg's amax collect and the remaining lazy
+    # plan-building instead of queueing them behind it (guide §2.6)
+    def _other_legs():
+        cand = normed.select(
+            F.col("vid").alias("cand_id"), F.col("vn").alias("cand_vec")
         )
-        .withColumn("rnk", F.row_number().over(bw))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", "rnk")
+        qry = normed.filter(F.col("vid") < N_QUERIES).select(
+            F.col("vid").alias("query_id"), F.col("vn").alias("query_vec")
+        )
+        bw = Window.partitionBy("query_id").orderBy(
+            F.desc("cos_sim"), F.asc("cand_id")
+        )
+        brute_df = (
+            cand.join(F.broadcast(qry))
+            .filter(F.col("cand_id") != F.col("query_id"))
+            .select(
+                "query_id",
+                "cand_id",
+                dot(F.col("query_vec"), F.col("cand_vec")).alias("cos_sim"),
+            )
+            .withColumn("rnk", F.row_number().over(bw))
+            .filter(F.col("rnk") <= TOP_K)
+            .select("query_id", "cand_id", "cos_sim", "rnk")
+        )
+        brute = tag(brute_df, "brute")
+        w = Window.partitionBy("id_a").orderBy(
+            F.col("cos_sim").desc(), F.col("id_b")
+        )
+        near = _near_dup_pairs(spark, sf_dir, normed=normed).select(
+            F.lit("near_dup").alias("method"),
+            F.col("id_a").alias("query_id"),
+            F.col("id_b").alias("cand_id"),
+            F.col("cos_sim").alias("score"),
+            F.row_number().over(w).alias("rnk"),
+        )
+        seeded = tag(
+            ivf_topk_expr(
+                emb,
+                F.col("vec_id") < N_QUERIES,
+                n_centroids=N_CENTROIDS,
+                k=TOP_K,
+                normed=normed,
+            ),
+            "seeded_expr",
+        )
+        quantized, scale = quantize_embeddings_int8(emb)
+        qids = emb.filter(F.col("vec_id") < N_QUERIES)
+        int8 = tag(
+            dequantize_topk(quantized, qids.select("vec_id"), scale, k=TOP_K),
+            "int8",
+        )
+        # round 12: the battery absorbed the former embedding_quant_battery
+        # row (per-vector norms + int8/sign-bit quantization integer stats)
+        # so the registry fits the driver's 50-row correctness window —
+        # same columns, tagged method='quant', NULL on the ANN tiers' rows
+        quant = _quant_battery(spark, sf_dir).withColumn(
+            "method", F.lit("quant")
+        )
+        return brute, near, seeded, int8, quant
+
+    certified, (brute, near, seeded, int8, quant) = overlap(
+        spark,
+        lambda: _certified_leg(spark, sf_dir, emb, tag, normed),
+        _other_legs,
     )
-    brute = tag(brute_df, "brute")
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("cos_sim").desc(), F.col("id_b")
-    )
-    near = _near_dup_pairs(spark, sf_dir, normed=normed).select(
-        F.lit("near_dup").alias("method"),
-        F.col("id_a").alias("query_id"),
-        F.col("id_b").alias("cand_id"),
-        F.col("cos_sim").alias("score"),
-        F.row_number().over(w).alias("rnk"),
-    )
-    seeded = tag(
-        ivf_topk_expr(
-            emb,
-            F.col("vec_id") < N_QUERIES,
-            n_centroids=N_CENTROIDS,
-            k=TOP_K,
-            normed=normed,
-        ),
-        "seeded_expr",
-    )
-    quantized, scale = quantize_embeddings_int8(emb)
-    qids = emb.filter(F.col("vec_id") < N_QUERIES)
-    int8 = tag(
-        dequantize_topk(quantized, qids.select("vec_id"), scale, k=TOP_K),
-        "int8",
-    )
-    # round 12: the battery absorbed the former embedding_quant_battery
-    # row (per-vector norms + int8/sign-bit quantization integer stats)
-    # so the registry fits the driver's 50-row correctness window —
-    # same columns, tagged method='quant', NULL on the ANN tiers' rows
-    quant = _quant_battery(spark, sf_dir).withColumn(
-        "method", F.lit("quant")
-    )
-    # join the certified leg's overlapped construction last — by now
-    # the amax collect and every lazy leg's plan-building have run
-    # concurrently with its index build
-    certified = cert_fut.result()
-    pool.shutdown()
     return (
         brute.unionByName(near)
         .unionByName(seeded)
@@ -750,12 +747,8 @@ def _ann_ivf_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran back-to-back; overlap it on driver threads (guide §2.6).
     # Each thunk returns a lazy DataFrame; the union's single action
     # still computes every tier's probe plan together as before.
-    from concurrent.futures import ThreadPoolExecutor
-
     order = ("ivf_adaptive", "kmeans", "pq", "hnsw")
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = {name: pool.submit(tiers[name]) for name in order}
-        dfs = [futs[name].result() for name in order]
+    dfs = overlap(spark, *(tiers[name] for name in order))
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)

@@ -115,57 +115,6 @@ def test_mega_bucket_guard_skips_boilerplate(spark, tmp_path):
     assert out2[0]["status"] == "exists" and out2[0]["dup_of"] == 1
 
 
-def test_streaming_runner_index_is_the_state(spark, corpus, tmp_path):
-    """Micro-batches classify against the shared parquet index: batch 2
-    catches a dup of a doc appended by batch 1, and the final index
-    equals what sequential batch calls would build."""
-    from etl_sentinel_imagery_spark.streaming.dedup_stream import (
-        run_incremental_dedup_stream,
-    )
-
-    idx = str(tmp_path / "idx")
-    build_signature_index(corpus, idx)
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    # two files → maxFilesPerTrigger=1 gives two micro-batches in order
-    b1 = spark.createDataFrame(
-        [(10, THIRD), (11, BASE)], ["doc_id", "text"]
-    )
-    b2 = spark.createDataFrame(
-        [(20, THIRD), (21, "wholly novel tiny text")],
-        ["doc_id", "text"],
-    )
-    b1.coalesce(1).write.parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = run_incremental_dedup_stream(stream, idx, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    status = {
-        r["doc_id"]: (r["status"], r["dup_of"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert status[11] == ("exists", 1)  # vs the at-rest corpus
-    assert status[21][0] == "new"
-    # doc 10 and 20 are copies of THIRD; whichever micro-batch ran
-    # first appended its copy and the other must reference it
-    first, second = (10, 20) if status[10][0] == "new" else (20, 10)
-    assert status[first] == ("new", None)
-    assert status[second] == ("exists", first)
-    indexed = {
-        r["doc"] for r in spark.read.parquet(f"{idx}/sigs").collect()
-    }
-    assert indexed == {1, 2, first, 21}
-
-
 def test_replayed_batch_is_idempotent(spark, corpus, tmp_path):
     """Replaying the same batch (crash-recovery shape) classifies
     identically and appends nothing twice."""

@@ -1,5 +1,5 @@
-"""JSONL corpus ingest (permissive corrupt capture, round-trip) and the
-salted skew-proof join (equality with the plain join, hot-key spread)."""
+"""The salted skew-proof join (equality with the plain join, hot-key
+spread) and the skew diagnosis report."""
 
 from __future__ import annotations
 
@@ -7,39 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_sentinel_imagery_spark.operators.skew import salted_join
-from etl_sentinel_imagery_spark.sources.jsonl import (
-    clean_documents,
-    corrupt_documents,
-    read_documents_jsonl,
-    write_documents_jsonl,
-)
 from etl_sentinel_imagery_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
-
-
-def test_jsonl_read_captures_corrupt_lines(spark, tmp_path):
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "lang": "en", "text": "hello world"}\n'
-        '{"doc_id": 2, "lang": "de", "text": "hallo welt"}\n'
-        "{not json at all\n"
-        '{"doc_id": 3, "lang": "fr"}\n'  # missing text → valid, null text
-    )
-    parsed = read_documents_jsonl(spark, str(p))
-    good = clean_documents(parsed)
-    assert {r["doc_id"] for r in good.collect()} == {1, 2, 3}
-    bad = corrupt_documents(parsed).collect()
-    assert len(bad) == 1 and "not json" in bad[0]["corrupt_raw"]
-
-
-def test_jsonl_roundtrip_matches_parquet_corpus(spark, tmp_path):
-    docs = load_table(spark, SF_DIR, "documents")
-    out = str(tmp_path / "corpus")
-    write_documents_jsonl(docs, out, n_files=2)
-    back = clean_documents(read_documents_jsonl(spark, out))
-    a = {(r["doc_id"], r["lang"], r["text"]) for r in docs.collect()}
-    b = {(r["doc_id"], r["lang"], r["text"]) for r in back.collect()}
-    assert a == b
 
 
 def test_salted_join_matches_plain_join(spark):

@@ -233,3 +233,37 @@ def test_ivf_incremental_append_equals_full_build(spark, tmp_path):
         ).collect()
     )
     assert rows(inc_path) == rows(full_path)
+
+
+def test_bucket_stats_rows_resolve_the_pointer_for_uri_paths(spark, tmp_path):
+    """A ``file:`` URI index reads the same stats rows as its posix
+    path: the ``_CURRENT`` pointer is resolved, so a stale version left
+    by a crash between the pointer flip and the cleanup never leaks in
+    (a directory-root read would union both versions)."""
+    import os
+    import shutil
+
+    from etl_sentinel_imagery_spark.operators.similarity import (
+        _commit_bucket_stats,
+        _read_bucket_stats_rows,
+        _stats_dir,
+    )
+
+    path = str(tmp_path / "ivf_index")
+    sdir = _stats_dir(path)
+    _commit_bucket_stats(
+        [
+            {"bucket": 0, "n_members": 3, "min_cos": 0.5},
+            {"bucket": 1, "n_members": 2, "min_cos": 0.75},
+        ],
+        path,
+    )
+    (old,) = [e for e in os.listdir(sdir) if e.startswith("v_")]
+    shutil.copytree(os.path.join(sdir, old), str(tmp_path / "stale"))
+    newest = [{"bucket": 0, "n_members": 4, "min_cos": 0.25}]
+    _commit_bucket_stats(newest, path)
+    shutil.copytree(str(tmp_path / "stale"), os.path.join(sdir, old))
+
+    posix = _read_bucket_stats_rows(spark, path)
+    assert posix == newest
+    assert _read_bucket_stats_rows(spark, "file:" + path) == posix

@@ -218,3 +218,35 @@ def test_pca_reduced_index_recall(spark, tmp_path):
         total += 10
     assert hits_red / total >= 0.9   # faithful to the reduced space
     assert hits_full / total >= 0.2  # sanity vs full space
+
+
+def test_legacy_hnsw_index_with_an_empty_shard(spark, tmp_path):
+    """An index persisted before the HNSW meta existed recovers its
+    shard modulus from the graph layout. With shard 0 of 3 hashed
+    empty, a distinct-shard count would say 2 and the re-sharded
+    search would miss vectors; the highest shard id + 1 says 3."""
+    import os
+    import zlib
+
+    ids = [i for i in range(400) if zlib.crc32(str(i).encode()) % 3][:N]
+    assert {zlib.crc32(str(i).encode()) % 3 for i in ids} == {1, 2}
+    vecs = _corpus()
+    emb = spark.createDataFrame(
+        [(ids[j], vecs[j].tolist()) for j in range(N)],
+        "vec_id bigint, embedding array<double>",
+    )
+    d = str(tmp_path / "legacy")
+    build_serving_index(
+        emb, d, n_centroids=4, kmeans_iters=3, kmeans_init="first_k",
+        hnsw=True, hnsw_shards=3,
+    )
+    os.remove(os.path.join(d, "hnsw_meta.json"))
+
+    q = ids[3]
+    queries = spark.createDataFrame(
+        [(q, vecs[3].tolist())], "vec_id bigint, embedding array<double>"
+    )
+    out = topk(spark, queries, d, k=5, tier="hnsw", ef_search=64).collect()
+    got = {r["cand_id"] for r in out}
+    want = {w[0] for w in _brute_topk(vecs, ids, vecs[3], 5, self_id=q)}
+    assert len(got & want) >= 4, (got, want)

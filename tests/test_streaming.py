@@ -308,200 +308,6 @@ def test_stream_static_enrichment_matches_batch(spark, events_stream_dir):
     assert got == want and got
 
 
-def test_streaming_sketch_rollup_equals_batch_sketch(spark, tmp_path):
-    """The foreachBatch HLL rollup: after the stream drains, the
-    persisted per-day sketches must equal the batch-built sketches
-    REGISTER FOR REGISTER, and re-merging the full input once more (a
-    simulated replay) must not move a single register (idempotence)."""
-    from etl_sentinel_imagery_spark.operators.sketches import hll_sketch
-    from etl_sentinel_imagery_spark.streaming.sketch_stream import (
-        merge_sketch_table,
-        run_sketch_rollup,
-    )
-
-    events = load_table(spark, SF_DIR, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    src = str(tmp_path / "events_multi")
-    # several files → several micro-batches under maxFilesPerTrigger
-    events.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    table = str(tmp_path / "sketches")
-    run_sketch_rollup(
-        stream, ["day"], "user_id", table, str(tmp_path / "ckpt")
-    )
-
-    from etl_sentinel_imagery_spark.streaming.sketch_stream import (
-        read_sketch_table,
-    )
-
-    got = {
-        str(r["day"]): list(r["hll"])
-        for r in read_sketch_table(spark, table).collect()
-    }
-    want = {
-        str(r["day"]): list(r["hll"])
-        for r in hll_sketch(events, ["day"], "user_id").collect()
-    }
-    assert got == want
-
-    # replay the WHOLE input against the final table: registers unmoved
-    replayed = merge_sketch_table(
-        spark, hll_sketch(events, ["day"], "user_id"), table, ["day"]
-    )
-    after = {str(r["day"]): list(r["hll"]) for r in replayed.collect()}
-    assert after == want
-
-
-def test_streaming_additive_sketch_rollup_bounds_and_replay(spark, tmp_path):
-    """Per-epoch additive sketches: merged-across-epochs answers keep the
-    sketch bounds vs the batch truth, histograms merge EXACTLY, and a
-    replayed epoch (dynamic partition overwrite) changes nothing."""
-    from etl_sentinel_imagery_spark.operators.sketches import (
-        histogram_merge_agg,
-        topk_merge_agg,
-    )
-    from etl_sentinel_imagery_spark.streaming.sketch_stream import (
-        run_additive_sketch_rollup,
-    )
-
-    events = load_table(spark, SF_DIR, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    src = str(tmp_path / "events_multi")
-    events.repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    table = str(tmp_path / "additive")
-    edges = [10.0, 50.0, 200.0]
-    run_additive_sketch_rollup(
-        stream, ["day"], "user_id", "value", table, str(tmp_path / "ckpt"),
-        k=3, edges=edges,
-    )
-
-    merged = (
-        spark.read.parquet(table)
-        .groupBy("day")
-        .agg(
-            topk_merge_agg("items", "off", 3).alias("top"),
-            histogram_merge_agg("hist", len(edges) + 1).alias("hist"),
-        )
-        .collect()
-    )
-    assert merged
-
-    for row in merged:
-        day = row["day"]
-        raw = events.filter(F.col("day") == day)
-        exact_hist = [
-            raw.filter(F.col("value") < edges[0]).count(),
-            raw.filter((F.col("value") >= edges[0]) & (F.col("value") < edges[1])).count(),
-            raw.filter((F.col("value") >= edges[1]) & (F.col("value") < edges[2])).count(),
-            raw.filter(F.col("value") >= edges[2]).count(),
-        ]
-        assert list(row["hist"]) == exact_hist
-        true_counts = {
-            str(r["user_id"]): r["cnt"]
-            for r in raw.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        items, off = dict(row["top"]["items"]), row["top"]["off"]
-        for item, est in items.items():
-            assert true_counts[item] <= est <= true_counts[item] + off
-        for item, cnt in true_counts.items():
-            if item not in items:
-                assert cnt <= off
-
-    # replay: rerun the whole stream against a FRESH checkpoint but the
-    # SAME table — every epoch rewrites its own partition, rows unchanged
-    before = sorted(
-        map(str, spark.read.parquet(table).drop("epoch_id").collect())
-    )
-    stream2 = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run_additive_sketch_rollup(
-        stream2, ["day"], "user_id", "value", table, str(tmp_path / "ckpt2"),
-        k=3, edges=edges,
-    )
-    after = sorted(
-        map(str, spark.read.parquet(table).drop("epoch_id").collect())
-    )
-    assert after == before
-
-
-def test_streaming_kll_rollup_bounds_and_replay(spark, tmp_path):
-    """Epoch-keyed KLL rollup: quantiles merged across micro-batch
-    epochs keep the rank bound vs the batch truth with EXACT n, and a
-    whole-stream replay into the same table changes nothing (dynamic
-    epoch overwrite)."""
-    import numpy as np
-
-    from etl_sentinel_imagery_spark.operators.kll import kll_merge_rows
-    from etl_sentinel_imagery_spark.streaming.sketch_stream import run_kll_rollup
-
-    events = load_table(spark, SF_DIR, "events").withColumn(
-        "etype", F.col("event_type")
-    )
-    src = str(tmp_path / "events_kll")
-    events.repartition(3).write.parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    table = str(tmp_path / "kll_rollup")
-    run_kll_rollup(stream(), ["etype"], "value", table, str(tmp_path / "ck1"))
-
-    def merged_by_type():
-        rows = spark.read.parquet(table).collect()
-        out: dict = {}
-        for et in {r["etype"] for r in rows}:
-            part = sorted(
-                (r for r in rows if r["etype"] == et),
-                key=lambda r: r["epoch_id"],
-            )
-            out[et] = kll_merge_rows([r["kll"] for r in part])
-        return out
-
-    merged = merged_by_type()
-    raw = events.filter(F.col("value").isNotNull()).select(
-        "etype", F.col("value").cast("double").alias("v")
-    ).collect()
-    by_type: dict = {}
-    for r in raw:
-        by_type.setdefault(r["etype"], []).append(r["v"])
-    assert set(merged) == set(by_type)
-    for et, vals in by_type.items():
-        s = np.sort(np.array(vals))
-        sk = merged[et]
-        assert sk.n == len(vals)
-        for q in (0.1, 0.5, 0.9):
-            est = sk.quantile(q)
-            rank = np.searchsorted(s, est, side="right") / len(s)
-            assert abs(rank - q) <= max(0.015, 3.0 / len(s))
-
-    # replay the entire stream with a FRESH checkpoint into the same
-    # table: every epoch rewrites its own partition; answers unchanged
-    before = {et: sk.to_row() for et, sk in merged.items()}
-    run_kll_rollup(stream(), ["etype"], "value", table, str(tmp_path / "ck2"))
-    after = {et: sk.to_row() for et, sk in merged_by_type().items()}
-    assert after == before
-
-
 def test_stream_stream_left_outer_join_emits_matchless(spark, tmp_path):
     """Left-outer stream-stream join: a purchase with no click in its
     window emits with NULL click columns — but only after the watermark
@@ -606,59 +412,3 @@ def test_streaming_txlog_sink_exactly_once(spark, events_stream_dir, tmp_path):
     )
     assert snapshot(spark, table).count() == batch_n
     assert len(history(table)) == v_before
-
-
-def test_streaming_cm_rollup_matches_batch(spark, events_stream_dir, tmp_path):
-    """Epoch-merged streaming CM grids equal the batch sketch over the
-    same input element-wise, and a full replay leaves the merged
-    answer unchanged."""
-    from etl_sentinel_imagery_spark.operators.sketches import (
-        cm_merge_agg,
-        cm_sketch,
-    )
-    from etl_sentinel_imagery_spark.streaming.events import read_events_stream
-    from etl_sentinel_imagery_spark.streaming.sketch_stream import (
-        run_cm_rollup,
-    )
-
-    W = 128
-    table = str(tmp_path / "cm_rollup")
-    run_cm_rollup(
-        read_events_stream(spark, events_stream_dir),
-        ["event_type"],
-        "user_id",
-        table,
-        str(tmp_path / "ck1"),
-        w=W,
-    )
-    merged = (
-        spark.read.parquet(table)
-        .groupBy("event_type")
-        .agg(cm_merge_agg("cm", W).alias("cm"))
-    )
-    batch = cm_sketch(
-        load_table(spark, SF_DIR, "events"), ["event_type"], "user_id", w=W
-    )
-    got = {r["event_type"]: r["cm"] for r in merged.collect()}
-    want = {r["event_type"]: r["cm"] for r in batch.collect()}
-    assert set(got) == set(want)
-    for et in want:
-        assert [list(r) for r in got[et]] == [list(r) for r in want[et]], et
-    # replay with a fresh checkpoint: same epochs overwrite themselves
-    run_cm_rollup(
-        read_events_stream(spark, events_stream_dir),
-        ["event_type"],
-        "user_id",
-        table,
-        str(tmp_path / "ck2"),
-        w=W,
-    )
-    again = {
-        r["event_type"]: r["cm"]
-        for r in spark.read.parquet(table)
-        .groupBy("event_type")
-        .agg(cm_merge_agg("cm", W).alias("cm"))
-        .collect()
-    }
-    for et in want:
-        assert [list(r) for r in again[et]] == [list(r) for r in want[et]]

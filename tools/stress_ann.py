@@ -142,6 +142,7 @@ def main() -> None:
                     range(N_QUERIES),
                     k=TOP_K,
                     ef_search=ef,
+                    n_shards=cpus,
                 ).collect()
                 out[f"hnsw_probe_s_ef{ef}"] = round(time.time() - t0, 2)
                 out[f"hnsw_recall_at_10_ef{ef}"] = round(

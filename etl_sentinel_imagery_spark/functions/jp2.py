@@ -26,9 +26,9 @@ spec's published conformance streams — none of which (nor any
 reference JP2 decoder: no PIL/glymur/opencv/ffmpeg) exist in this
 container. A from-scratch Tier-1 tested only against a from-scratch
 Tier-1 encoder would be circular, so pixel decode stays behind the
-injectable decoder seam (sources.http_bands.fetch_bands_http(decode=...)),
-and this parser supplies the typed metadata that seam attaches to the
-opaque bytes.
+injectable decoder seam (operators.multimodal.default_decoder /
+sources.http_bands.fetch_bands_http(decode=...)), and this parser
+supplies the typed metadata those seams attach to the opaque bytes.
 
 All functions raise ``Jp2ParseError`` (a ValueError) on malformed or
 truncated input — callers quarantine, never crash the job.

@@ -104,6 +104,16 @@ def test_cache_sink_geotiff_bytes(spark, tmp_path):
     assert spark.read.parquet(cache).count() == 2
 
 
+def test_multimodal_default_decoder_handles_tiff():
+    from etl_sentinel_imagery_spark.operators.multimodal import default_decoder
+
+    arr = np.arange(3 * 2 * 2, dtype="uint8").reshape(3, 2, 2)
+    buf = encode_geotiff(arr, TRANSFORM, "epsg:32631")
+    img = default_decoder(buf, {})
+    assert img.shape == (2, 2, 3)
+    np.testing.assert_array_equal(img, np.transpose(arr, (1, 2, 0)))
+
+
 def test_word_alignment_odd_payload():
     """TIFF 6.0: IFD and out-of-line values must sit on word boundaries
     even when the strip byte count is odd (3x3 uint8 = 9 bytes)."""

@@ -1,6 +1,6 @@
 """JPEG2000 structure parser: hand-assembled container/codestream
-fixtures (byte layout per ISO/IEC 15444-1 §A/§I) and malformed-input
-errors."""
+fixtures (byte layout per ISO/IEC 15444-1 §A/§I), malformed-input
+errors, the Spark metadata operator, and the HTTP e2e seam."""
 
 from __future__ import annotations
 
@@ -126,3 +126,28 @@ def test_malformed_inputs_raise_parse_error():
             struct.pack(">H", 0xFF4F) + _siz() + _cod(transform=9)
             + struct.pack(">H", 0xFFD9)
         )
+
+
+def test_spark_jp2_metadata_operator_quarantines_corrupt_rows(spark):
+    from etl_sentinel_imagery_spark.operators.multimodal import jp2_metadata
+
+    rows = [
+        (1, bytearray(_codestream())),
+        (2, bytearray(_jp2_container(_codestream(n_tiles=1)))),
+        (3, bytearray(b"not an image at all")),
+    ]
+    media = spark.createDataFrame(rows, "doc_id bigint, payload binary")
+    got = {r["doc_id"]: r for r in jp2_metadata(media).collect()}
+    assert got[1]["width"] == 512 and got[1]["n_tile_parts"] == 2
+    assert got[1]["coded_bytes"] == 81 and got[1]["parse_error"] is None
+    assert got[2]["n_tiles"] == 2 and got[2]["reversible"]
+    assert got[3]["width"] is None and "signature" in got[3]["parse_error"]
+
+
+def test_default_decoder_reports_parsed_jp2_structure():
+    from etl_sentinel_imagery_spark.operators.multimodal import default_decoder
+
+    with pytest.raises(NotImplementedError) as ei:
+        default_decoder(_jp2_container(_codestream()), {})
+    msg = str(ei.value)
+    assert "512x256" in msg and "5/3 reversible" in msg and "2 tile-part" in msg

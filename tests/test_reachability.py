@@ -28,6 +28,7 @@ ROOTS = {
     f"{PKG}/sources/txlog_stream.py": "README-named txlog stream source",
     f"{PKG}/sources/odata_source.py": "OData catalog pushdown (ROADMAP C5)",
     f"{PKG}/functions/jp2.py": "the reference's JP2 band format (C2)",
+    f"{PKG}/operators/multimodal.py": "media decode seam + GIF/WAV/video codecs (C6)",
 }
 
 

@@ -1,10 +1,21 @@
-"""Resize kernels (half-pixel-center bilinear / nearest): exact
-interpolation values, identity at same size."""
+"""Resize kernels (half-pixel-center bilinear / nearest) and the
+decode→resize→re-encode media operator: exact interpolation values,
+identity at same size, geo-transform scaling on round-trip."""
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
+from etl_sentinel_imagery_spark.functions.geotiff import (
+    decode_geotiff,
+    encode_geotiff,
+)
+from etl_sentinel_imagery_spark.operators.multimodal import (
+    attach_synthetic_media,
+    fake_decoder,
+    resize_media,
+)
 from etl_sentinel_imagery_spark.operators.raster import (
     resize_bilinear,
     resize_nearest,
@@ -51,3 +62,54 @@ def test_uint8_rounding_clips_and_rounds():
     assert out.dtype == np.uint8
     assert out[1, 1] == 128  # round-half-even: 127.5 → 128
     assert out.min() >= 0 and out.max() <= 255
+
+
+def test_resize_media_geotiff_roundtrip(spark):
+    """Real end-to-end: encode a known uint16 raster, resize to half via
+    the operator, decode the output payload — pixel values equal the
+    kernel applied directly and the affine transform doubled its pixel
+    size (same ground extent)."""
+    rng = np.random.default_rng(11)
+    arr = rng.integers(0, 4096, size=(8, 12), dtype=np.uint16)
+    t = {"a": 10.0, "b": 0.0, "c": 500.0, "d": 0.0, "e": -10.0, "f": 900.0}
+    payload = encode_geotiff(arr, t, "epsg:32633", nodata=0)
+    df = spark.createDataFrame(
+        [(1, bytearray(payload))], "doc_id bigint, payload binary"
+    )
+    rows = resize_media(df, 4, 6, method="bilinear").collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r["height"], r["width"]) == (4, 6)
+    chw, t2, crs2, nodata2 = decode_geotiff(bytes(r["payload"]))
+    assert crs2 == "epsg:32633" and nodata2 == 0
+    assert t2["a"] == 20.0 and t2["e"] == -20.0
+    assert t2["c"] == 500.0 and t2["f"] == 900.0
+    want = resize_bilinear(arr, 4, 6)
+    assert np.array_equal(chw[0], want)
+    assert r["channel_means"] == [float(want.astype(np.float64).mean())]
+
+
+def test_resize_media_injected_decoder_batch(spark):
+    """Non-TIFF payloads go through the decoder seam; every input doc
+    yields one row at the target shape, re-encoded as GeoTIFF."""
+    docs = spark.createDataFrame(
+        [(i, f"doc number {i} body text here") for i in range(10)],
+        "doc_id bigint, text string",
+    )
+    media = attach_synthetic_media(docs)
+    out = resize_media(
+        media, 6, 6, method="nearest", decoder=fake_decoder
+    ).collect()
+    assert len(out) == 10
+    for r in out:
+        assert (r["height"], r["width"]) == (6, 6)
+        chw, t2, _, _ = decode_geotiff(bytes(r["payload"]))
+        assert chw.shape == (3, 6, 6)
+        assert len(r["channel_means"]) == 3
+    # determinism: same payload → same resized bytes
+    again = resize_media(
+        media, 6, 6, method="nearest", decoder=fake_decoder
+    ).collect()
+    assert {r["doc_id"]: bytes(r["payload"]) for r in out} == {
+        r["doc_id"]: bytes(r["payload"]) for r in again
+    }

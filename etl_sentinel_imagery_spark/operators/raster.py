@@ -11,11 +11,16 @@ explicit affine-georeferenced array model:
         x = a·col + b·row + c ;  y = d·col + e·row + f
     (north-up rasters: b = d = 0, e < 0)
 
-Spark execution model per SURVEY.md §2.9: single-raster ops are per-row
-(mapInArrow — embarrassingly parallel over products); stack and mosaic
-are grouped ops (groupBy(key).applyInArrow) with explicit intra-group
-ordering so first-wins semantics stay deterministic under parallelism.
-Normalize runs inside the stack kernel, one band at a time. Pixels cross
+Each per-product step is one kernel over a (fields, pixels) raster:
+:func:`stack_kernel` (normalize inside it, one band at a time),
+:func:`clip_kernel` and :func:`reproject_kernel`, composed by
+:func:`process_product`. The pipeline runs that composition inside the
+task that downloads the bands (sources.http_bands.fetch_stacks), so a
+product crosses the JVM↔Python boundary once. The Spark stages here wrap
+the same kernels one step at a time: per-row ops as mapInArrow, stack and
+mosaic as grouped ops (groupBy(key).applyInArrow) with explicit
+intra-group ordering so first-wins semantics stay deterministic under
+parallelism. Pixels cross
 the JVM↔Python boundary as Arrow nested lists through one codec pair,
 :func:`to_list_array` / :func:`from_list_array`, which reshape the flat
 int32 values buffer instead of building a Python object per pixel.
@@ -23,6 +28,7 @@ int32 values buffer instead of building a Python object per pixel.
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Mapping
 from typing import Callable, Iterable, Iterator
@@ -276,23 +282,114 @@ def raster_batch(keys: dict[str, pa.Array], pixels: np.ndarray, transform,
 
 
 def raster_rows(data: pa.RecordBatch | pa.Table):
-    """(index, non-pixel fields as a dict, pixels as numpy) per row."""
+    """(non-pixel fields as a dict, pixels as numpy) per row."""
     meta = data.drop_columns(["pixels"]).to_pylist()
     pixels = data.column("pixels")
     for i, m in enumerate(meta):
-        yield i, m, from_list_array(pixels.slice(i, 1))[0]
+        yield m, from_list_array(pixels.slice(i, 1))[0]
 
 
-def row_keys(batch: pa.RecordBatch, i: int, *names: str) -> dict[str, pa.Array]:
-    """Row ``i`` of the named columns, as :func:`raster_batch` ``keys``."""
-    return {n: batch.column(n).slice(i, 1) for n in names}
+def stack_batch(r: dict, pixels: np.ndarray) -> pa.RecordBatch:
+    """One STACK_SCHEMA row from a stack's fields and pixels."""
+    keys = {
+        "product_id": pa.array([r["product_id"]], pa.string()),
+        "bands": pa.array([list(r["bands"])], pa.list_(pa.string())),
+    }
+    return raster_batch(keys, pixels, r["transform"], r["crs"], r["nodata"])
+
+
+# ========================= per-product kernels ============================
+# A raster is (fields, pixels): pixels (bands, h, w) and fields holding at
+# least transform, crs and nodata. The Spark stages below and the fused
+# per-product pass (sources.http_bands.fetch_stacks) run these same kernels.
+_GEOMETRY = ("height", "width", "transform", "crs", "nodata")
+
+
+def stack_kernel(
+    rows: Iterable[tuple[dict, np.ndarray]], n_bands: int, normalize: bool
+) -> tuple[dict, np.ndarray]:
+    """R3: stack one product's ``n_bands`` single-band rasters, given in
+    lexicographic band order (O4, imagery_store.py:67-68), into one
+    (bands, h, w) int32 array. ``normalize`` applies R1
+    (:func:`normalize_s2`) one band at a time, so the float64 temporaries
+    stay one band big. ``rows`` may be a generator: then only the band
+    being stacked is held beside the stack.
+
+    Every band must match the first on height, width, transform, crs and
+    nodata; a mismatch raises ValueError naming the product and band."""
+    out, names = None, []
+    for k, (m, band) in enumerate(rows):
+        if out is None:
+            first = m
+            out = np.empty((n_bands, m["height"], m["width"]), np.int32)
+        bad = [f for f in _GEOMETRY if m[f] != first[f]]
+        if bad or band.shape != out.shape[1:]:
+            raise ValueError(
+                f"stack_bands: product {m['product_id']} band {m['band']} "
+                f"differs from band {first['band']} in "
+                f"{', '.join(bad) or f'pixel shape {band.shape}'}"
+            )
+        out[k] = normalize_s2(band) if normalize else band
+        names.append(m["band"])
+    fields = {f: first[f] for f in ("product_id", "transform", "crs", "nodata")}
+    return {**fields, "bands": names}, out
+
+
+def clip_kernel(
+    r: dict, pixels: np.ndarray, bbox: tuple[float, float, float, float]
+) -> tuple[dict, np.ndarray]:
+    """R2 on one raster: crop to ``bbox``, given in the raster's CRS."""
+    out, t = clip_to_bbox(pixels, as_affine(r["transform"]), bbox)
+    return {**r, "transform": t}, out
+
+
+def reproject_kernel(
+    r: dict, pixels: np.ndarray, dst_crs: str = "epsg:4326"
+) -> tuple[dict, np.ndarray]:
+    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71).
+
+    Source CRS 'epsg:326xx' (UTM north) maps through the ellipsoidal
+    Krüger series (functions.proj); a raster already in ``dst_crs``
+    passes through unchanged."""
+    src_t = as_affine(r["transform"])
+    crs = str(r["crs"]).lower()
+    if crs == dst_crs:
+        return r, pixels
+    if not crs.startswith("epsg:326"):
+        raise NotImplementedError(f"source CRS {crs}")
+    zone = int(crs[-2:])
+    dst_t, dst_shape = default_wgs84_grid(src_t, pixels.shape[1:], utm_inverse(zone))
+    out = resample_nearest(
+        pixels, src_t, dst_t, dst_shape,
+        inverse_coord_fn=utm_forward(zone),  # dst grid → src coords
+        nodata=r["nodata"],
+    )
+    return {**r, "transform": dst_t, "crs": dst_crs}, out
+
+
+def process_product(
+    rows: Iterable[tuple[dict, np.ndarray]],
+    n_bands: int,
+    normalize: bool,
+    clip_bbox: tuple[float, float, float, float] | None = None,
+    reproject_4326: bool = False,
+) -> tuple[dict, np.ndarray]:
+    """R6/R7 (tx.py:110-138, intended semantics) on one product's bands:
+    stack(+normalize) → clip to ``clip_bbox`` when given → reproject to
+    WGS84 when asked."""
+    r, pixels = stack_kernel(rows, n_bands, normalize)
+    if clip_bbox is not None:
+        r, pixels = clip_kernel(r, pixels, clip_bbox)
+    if reproject_4326:
+        r, pixels = reproject_kernel(r, pixels, "epsg:4326")
+    return r, pixels
 
 
 # =========================== Spark stages ================================
 def normalize_pixels_col(pixels: Column | str) -> Column:
     """R1 as JVM nested-array arithmetic, for callers that normalize a
     pixel column themselves; the pipeline normalizes inside
-    :func:`stack_bands` instead. (floor == numpy's uint8 truncation for
+    :func:`stack_kernel` instead. (floor == numpy's uint8 truncation for
     non-negative reflectances.)"""
     col = F.col(pixels) if isinstance(pixels, str) else pixels
     return F.transform(
@@ -310,109 +407,52 @@ def normalize_pixels_col(pixels: Column | str) -> Column:
 
 
 def _map_rows(
-    stacked_df: DataFrame, kernel: Callable[[dict, np.ndarray], tuple]
+    stacked_df: DataFrame, kernel: Callable[[dict, np.ndarray], tuple[dict, np.ndarray]]
 ) -> DataFrame:
     """The per-row stage skeleton (mapInArrow, no shuffle): decode each
-    STACK_SCHEMA row, run ``kernel(fields, pixels) → (pixels, transform,
-    crs)``, and emit the row with its keys and nodata unchanged."""
+    STACK_SCHEMA row and emit ``kernel(fields, pixels) → (fields,
+    pixels)`` as one row."""
 
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for i, r, pix in raster_rows(batch):
-                out, t, crs = kernel(r, pix)
-                yield raster_batch(
-                    row_keys(batch, i, "product_id", "bands"), out, t, crs, r["nodata"]
-                )
+            for r, pix in raster_rows(batch):
+                yield stack_batch(*kernel(r, pix))
 
     return stacked_df.mapInArrow(_run, schema=STACK_SCHEMA)
 
 
 def _reduce_groups(
     df: DataFrame, key: str, order: str, schema: str,
-    kernel: Callable[[list[tuple[dict, np.ndarray]]], tuple],
+    kernel: Callable[[list[tuple[dict, np.ndarray]]], pa.RecordBatch],
 ) -> DataFrame:
     """The per-group stage skeleton (groupBy(key).applyInArrow): decode the
     group's rows sorted by ``order`` (deterministic whatever the shuffle
-    arrival order), run ``kernel([(fields, pixels), …]) → (keys, pixels,
-    transform)``, and emit one row with the first row's crs and nodata."""
+    arrival order) and emit ``kernel([(fields, pixels), …])``, one row."""
 
     def _run(table: pa.Table) -> pa.Table:
-        rows = sorted(raster_rows(table), key=lambda r: r[1][order])
-        rows = [(m, pix) for _, m, pix in rows]
-        keys, out, t = kernel(rows)
-        first = rows[0][0]
-        return pa.Table.from_batches(
-            [raster_batch(keys, out, t, first["crs"], first["nodata"])]
-        )
+        rows = sorted(raster_rows(table), key=lambda r: r[0][order])
+        return pa.Table.from_batches([kernel(rows)])
 
     return df.groupBy(key).applyInArrow(_run, schema=schema)
 
 
-_GEOMETRY = ("height", "width", "transform", "crs", "nodata")
-
-
 def stack_bands(single_band_df: DataFrame, normalize: bool = False) -> DataFrame:
-    """R3: collect a product's bands in lexicographic band order (O4,
-    imagery_store.py:67-68) into one (bands, h, w) stack. ``normalize``
-    applies R1 (:func:`normalize_s2`) one band at a time, so the float64
-    temporaries stay one band big.
-
-    Every band must match the first on height, width, transform, crs and
-    nodata; a mismatch raises ValueError naming the product and band."""
-
-    def _stack(rows):
-        first = rows[0][0]
-        out = np.empty((len(rows), first["height"], first["width"]), np.int32)
-        for k, (m, band) in enumerate(rows):
-            bad = [f for f in _GEOMETRY if m[f] != first[f]]
-            if bad or band.shape != out.shape[1:]:
-                raise ValueError(
-                    f"stack_bands: product {m['product_id']} band {m['band']} "
-                    f"differs from band {first['band']} in "
-                    f"{', '.join(bad) or f'pixel shape {band.shape}'}"
-                )
-            out[k] = normalize_s2(band) if normalize else band
-        keys = {
-            "product_id": pa.array([first["product_id"]], pa.string()),
-            "bands": pa.array([[m["band"] for m, _ in rows]], pa.list_(pa.string())),
-        }
-        return keys, out, first["transform"]
-
-    return _reduce_groups(single_band_df, "product_id", "band", STACK_SCHEMA, _stack)
-
-
-def clip_stacks(stacked_df: DataFrame, bbox: tuple[float, float, float, float]) -> DataFrame:
-    """R2 over stacked products, per row."""
-    return _map_rows(
-        stacked_df,
-        lambda r, pix: (*clip_to_bbox(pix, as_affine(r["transform"]), bbox), r["crs"]),
+    """R3 over SINGLE_BAND_SCHEMA rows: :func:`stack_kernel` per product,
+    its bands shuffled together and sorted by name."""
+    return _reduce_groups(
+        single_band_df, "product_id", "band", STACK_SCHEMA,
+        lambda rows: stack_batch(*stack_kernel(rows, len(rows), normalize)),
     )
 
 
+def clip_stacks(stacked_df: DataFrame, bbox: tuple[float, float, float, float]) -> DataFrame:
+    """R2 over stacked products: :func:`clip_kernel` per row."""
+    return _map_rows(stacked_df, functools.partial(clip_kernel, bbox=bbox))
+
+
 def reproject_stacks(stacked_df: DataFrame, dst_crs: str = "epsg:4326") -> DataFrame:
-    """R4: nearest-neighbor reprojection to WGS84 (tx.py:49-71), per row.
-
-    Source CRS 'epsg:326xx' (UTM north) maps through the ellipsoidal
-    Krüger series (functions.proj); a raster already in ``dst_crs``
-    passes through unchanged."""
-
-    def _reproject(r, pix):
-        src_t = as_affine(r["transform"])
-        crs = str(r["crs"]).lower()
-        if crs == dst_crs:
-            return pix, src_t, r["crs"]
-        if not crs.startswith("epsg:326"):
-            raise NotImplementedError(f"source CRS {crs}")
-        zone = int(crs[-2:])
-        dst_t, dst_shape = default_wgs84_grid(src_t, pix.shape[1:], utm_inverse(zone))
-        out = resample_nearest(
-            pix, src_t, dst_t, dst_shape,
-            inverse_coord_fn=utm_forward(zone),  # dst grid → src coords
-            nodata=r["nodata"],
-        )
-        return out, dst_t, dst_crs
-
-    return _map_rows(stacked_df, _reproject)
+    """R4 over stacked products: :func:`reproject_kernel` per row."""
+    return _map_rows(stacked_df, functools.partial(reproject_kernel, dst_crs=dst_crs))
 
 
 def mosaic_stacks(stacked_df: DataFrame, mosaic_key: Column | None = None) -> DataFrame:
@@ -436,7 +476,7 @@ def mosaic_stacks(stacked_df: DataFrame, mosaic_key: Column | None = None) -> Da
             "n_inputs": pa.array([len(rows)], pa.int32()),
             "bands": pa.array([first["bands"]], pa.list_(pa.string())),
         }
-        return keys, out, t
+        return raster_batch(keys, out, t, first["crs"], first["nodata"])
 
     df = stacked_df.withColumn("mosaic_key", key)
     return _reduce_groups(df, "mosaic_key", "product_id", schema, _mosaic)

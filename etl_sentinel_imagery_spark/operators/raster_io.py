@@ -44,7 +44,7 @@ def with_geotiff(stacked: DataFrame, dtype: str = "int32") -> DataFrame:
         for batch in batches:
             tifs = [
                 encode_geotiff(pix.astype(np_dtype), r["transform"], r["crs"], r["nodata"])
-                for _, r, pix in raster_rows(batch)
+                for r, pix in raster_rows(batch)
             ]
             yield batch.append_column("tif", pa.array(tifs, pa.binary()))
 

@@ -4,30 +4,36 @@ The reference's end-to-end flow (`dataset.py:35-59` → `imagery_store.py:
 37-77` → `tx.py:110-138`), composed from the engine's operators with the
 reference's *intended* semantics (its latent bugs fixed — SURVEY.md §2.9:
 `etl_process` → `etl_process_tile`, the double band_stack call dropped,
-positional-arg swap fixed). One composition, :func:`etl_process_tile`,
-serves both the tile (R6) and the polygon (R7) path; both cache formats
-go through the one keyed writer in operators.raster_io.
+positional-arg swap fixed). One composition,
+operators.raster.process_product (stack(+normalize) → clip → reproject),
+serves both the tile (R6) and the polygon (R7) path; :func:`acquire` and
+plans.main.run_joined run it inside the task that downloads a product's
+bands (sources.http_bands.fetch_stacks), so each product crosses the
+JVM↔Python boundary once and no band row is shuffled.
+:func:`etl_process_tile` is the same kernels as separate Spark stages
+over per-band rows. Both cache formats go through the one keyed writer
+in operators.raster_io.
 
-The downloader sits behind a source interface: tests use a deterministic
-synthetic source; :class:`HttpBandSource` downloads inside executor
-tasks (sources.http_bands) with redirect-following chunked streaming and
-``coalesce(4)`` honoring the reference's 4-connection quota
-(imagery_store.py:134-147, README.md:66).
+The downloader sits behind a source interface: a :class:`BandSource`
+gives a picklable ``reader()``, the per-task read of one (product, band)
+that runs on the executor. Tests use a deterministic synthetic source;
+:class:`HttpBandSource` downloads with redirect-following chunked
+streaming. The products table is coalesced to 4 tasks, honoring the
+reference's 4-connection quota (imagery_store.py:134-147, README.md:66)
+without a shuffle.
 """
 
 from __future__ import annotations
 
 import functools
-from typing import Protocol
+import zlib
+from typing import Callable
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_sentinel_imagery_spark.operators.raster import (
-    SINGLE_BAND_SCHEMA,
     clip_stacks,
-    raster_batch,
     reproject_stacks,
     stack_bands,
 )
@@ -41,40 +47,63 @@ from etl_sentinel_imagery_spark.operators.selection import (
     filter_products,
     with_coverage_ratio,
 )
+from etl_sentinel_imagery_spark.sources.http_bands import (
+    fetch_bands,
+    fetch_stacks,
+    http_reader,
+    make_token_manager,
+    simple_band_url,
+)
 
 
-class BandSource(Protocol):
-    """Provides single-band rasters for (product, band) pairs."""
+class BandSource:
+    """Provides single-band rasters for (product, band) pairs, read inside
+    executor tasks."""
+
+    def reader(self) -> Callable[[], Callable[[str, str], dict]]:
+        """A picklable factory, called once per executor task, of that
+        task's ``read(product_id, band)`` → {height, width, pixels,
+        transform, crs, nodata} (the fields sources.http_bands.fetch_bands
+        documents)."""
+        raise NotImplementedError
 
     def fetch(self, spark: SparkSession, products: DataFrame, bands: list[str]) -> DataFrame:
-        """Return a DataFrame with SINGLE_BAND_SCHEMA rows."""
-        ...
+        """SINGLE_BAND_SCHEMA rows, one per (product, band)."""
+        return fetch_bands(products, bands, self.reader())
 
 
-class SyntheticBandSource:
-    """Deterministic in-memory band source for tests: pixel values are a
+def synthetic_reader(height: int, width: int, crs: str) -> Callable[[str, str], dict]:
+    """The read of :class:`SyntheticBandSource`: pixel values are a
     (product, band, row, col)-keyed integer pattern in the reflectance
-    range, so golden outputs are reproducible without I/O."""
+    range, on one 10 m grid anchored at (600000, 4800000)."""
+    rc = np.arange(height)[:, None] * 13 + np.arange(width) * 7
+
+    def read(product_id: str, band: str) -> dict:
+        base = zlib.crc32(f"{product_id}/{band}".encode()) % 90
+        return {
+            "height": height,
+            "width": width,
+            "pixels": ((base + rc) * 157) % 15000,
+            "transform": (10.0, 0.0, 600000.0, 0.0, -10.0, 4800000.0),
+            "crs": crs,
+            "nodata": 0,
+        }
+
+    return read
+
+
+class SyntheticBandSource(BandSource):
+    """Deterministic band source for tests: golden outputs are
+    reproducible without I/O (:func:`synthetic_reader`)."""
 
     def __init__(self, height: int = 8, width: int = 8, crs: str = "epsg:32631"):
         self.height, self.width, self.crs = height, width, crs
 
-    def fetch(self, spark: SparkSession, products: DataFrame, bands: list[str]) -> DataFrame:
-        rc = np.arange(self.height)[:, None] * 13 + np.arange(self.width) * 7
-        batches = []
-        for i, p in enumerate(sorted(r["uuid"] for r in products.select("uuid").collect())):
-            for bi, band in enumerate(sorted(bands)):
-                base = (i * 37 + bi * 11) % 90
-                transform = (10.0, 0.0, 600000.0 + i * 40.0, 0.0, -10.0, 4800000.0)
-                keys = {"product_id": pa.array([p]), "band": pa.array([band])}
-                pixels = ((base + rc) * 157) % 15000
-                batches.append(raster_batch(keys, pixels, transform, self.crs, 0))
-        if not batches:
-            return spark.createDataFrame([], schema=SINGLE_BAND_SCHEMA)
-        return spark.createDataFrame(pa.Table.from_batches(batches), schema=SINGLE_BAND_SCHEMA)
+    def reader(self) -> Callable[[], Callable[[str, str], dict]]:
+        return functools.partial(synthetic_reader, self.height, self.width, self.crs)
 
 
-class HttpBandSource:
+class HttpBandSource(BandSource):
     """Live downloader (imagery_store.py:92-147 semantics): per-band
     chunked streaming HTTP with redirect-following and 401→token-refresh
     retry inside executor tasks, coalesced to the 4-connection quota.
@@ -86,21 +115,11 @@ class HttpBandSource:
     def __init__(self, base_url: str, token_url: str):
         self.base_url, self.token_url = base_url, token_url
 
-    def fetch(self, spark: SparkSession, products: DataFrame, bands: list[str]) -> DataFrame:
-        from etl_sentinel_imagery_spark.sources.http_bands import (
-            fetch_bands_http,
-            make_token_manager,
-            simple_band_url,
-        )
-
-        return fetch_bands_http(
-            spark,
-            products,
-            bands,
-            url_for=functools.partial(simple_band_url, self.base_url),
-            token_manager_factory=functools.partial(
-                make_token_manager, self.token_url
-            ),
+    def reader(self) -> Callable[[], Callable[[str, str], dict]]:
+        return functools.partial(
+            http_reader,
+            functools.partial(simple_band_url, self.base_url),
+            functools.partial(make_token_manager, self.token_url),
         )
 
 
@@ -136,11 +155,12 @@ def etl_process_tile(
     reproject_4326: bool = False,
     clip_bbox: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """R6/R7 (tx.py:110-138, intended semantics): stack(+normalize) →
-    clip to ``clip_bbox`` when given (R7's polygon path, its redundant
-    double stack dropped) → optional reproject. Normalize runs inside the
-    stack kernel, one band at a time, after the per-band rows cross the
-    shuffle."""
+    """R6/R7 (tx.py:110-138, intended semantics) over SINGLE_BAND_SCHEMA
+    rows, one Spark stage per step: stack(+normalize) → clip to
+    ``clip_bbox`` when given (R7's polygon path, its redundant double
+    stack dropped) → optional reproject. The same kernels as the
+    pipeline's per-product pass (operators.raster.process_product), which
+    needs no band shuffle; this staged form is its reference."""
     stacked = stack_bands(band_rasters, normalize=normalize)
     if clip_bbox is not None:
         stacked = clip_stacks(stacked, clip_bbox)
@@ -183,9 +203,9 @@ def acquire(
     product = select_product(catalog, aoi_bbox, params, bands)
     if product.isEmpty():
         return product
-    rasters = source.fetch(spark, product, bands)
-    stacked = etl_process_tile(
-        rasters, normalize=normalize, reproject_4326=reproject_4326, clip_bbox=clip_bbox
+    stacked = fetch_stacks(
+        product, bands, source.reader(),
+        normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
     )
     if cache_dir is not None:
         sinks[cache_format](stacked, cache_dir)

@@ -7,9 +7,11 @@ Two execution modes:
 
 - :func:`run_joined` (DEFAULT, the scale path): every AOI in ONE joined
   plan (operators.selection.select_best_per_aoi — broadcast AOI table,
-  per-fid window), then band fetch + ETL once over the DISTINCT winning
-  products. No driver-side loop; thousands of AOIs cost one extra
-  broadcast join, and two AOIs sharing a winner fetch it once.
+  per-fid window), then one per-product pass over the DISTINCT winning
+  products that fetches, stacks and normalizes each in one task
+  (sources.http_bands.fetch_stacks). No driver-side loop; thousands of
+  AOIs cost one extra broadcast join, and two AOIs sharing a winner
+  fetch it once.
 - :func:`run` (fault-isolation option): the reference-shaped per-AOI
   loop — one acquisition per AOI row, a failing AOI logs and continues
   (the try/except `download_imagery.py:44-49` sketched). Use when AOIs
@@ -24,16 +26,13 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_sentinel_imagery_spark.operators.raster_io import write_cache
-from etl_sentinel_imagery_spark.plans.acquisition import (
-    BandSource,
-    acquire,
-    etl_process_tile,
-)
+from etl_sentinel_imagery_spark.plans.acquisition import BandSource, acquire
 from etl_sentinel_imagery_spark.operators.selection import (
     filter_products,
     select_best_per_aoi,
 )
 from etl_sentinel_imagery_spark.sources.config import AcquisitionConfig
+from etl_sentinel_imagery_spark.sources.http_bands import CONNECTION_QUOTA, fetch_stacks
 from etl_sentinel_imagery_spark.sources.geo_readers import (
     read_aoi_csv,
     read_aoi_geojson,
@@ -69,15 +68,19 @@ def run_joined(
     Returns ``(selection, stacked)``: the per-AOI winner table
     (fid → product record) and the ETL'd rasters of the distinct winning
     products. AOIs that intersect nothing (or have zero area) simply
-    don't appear in ``selection`` — no empty-guard loop needed."""
+    don't appear in ``selection`` — no empty-guard loop needed.
+
+    The distinct winners are spread round-robin over the connection
+    quota before the fetch: adaptive execution collapses the tiny
+    ``distinct()`` output to one partition, which the fetch's coalesce
+    cannot split, so all products would download in one task."""
     if config.aoi_path is None:
         raise ValueError("config.aoi_path is required")
     aois = read_aoi(spark, config.aoi_path)
     filtered = filter_products(catalog, **config.selection_params())
     selection = select_best_per_aoi(filtered, aois)
-    winners = selection.select("uuid").distinct()
-    rasters = source.fetch(spark, winners, config.bands)
-    stacked = etl_process_tile(rasters, normalize=config.normalize)
+    winners = selection.select("uuid").distinct().repartition(CONNECTION_QUOTA)
+    stacked = fetch_stacks(winners, config.bands, source.reader(), normalize=config.normalize)
     if cache_dir is not None:
         write_cache(stacked, cache_dir)
     return selection, stacked

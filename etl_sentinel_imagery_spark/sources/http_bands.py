@@ -6,20 +6,27 @@ auth, 8192-byte chunked streaming, and session refresh on auth failure —
 executed sequentially under a 4-connection server quota (README quota
 note, imagery_store.py:45).
 
-Spark shape: the (product × band) task table is coalesced to the
-connection quota so at most 4 concurrent connections exist cluster-wide,
-then a mapInArrow stage downloads and decodes inside the executor task
-and hands each band to the JVM as an Arrow nested list built from the
-decoded numpy buffer (operators.raster.raster_batch). The token
-lifecycle is a per-partition TokenManager built from broadcast
-credentials (a driver-side manager cannot serve executors); a 401
+Spark shape: one task skeleton (:func:`_product_pass`). The products
+table is coalesced to the connection quota, so at most 4 concurrent
+connections exist cluster-wide and no shuffle is added; each mapInArrow
+task reads its products' bands one at a time, in sorted order, through
+the source's executor-side read (download → decode → shape guard). Two
+emitters share that read: :func:`fetch_bands` hands each band to the JVM
+as one SINGLE_BAND_SCHEMA row, and :func:`fetch_stacks` — the pipeline's
+path — runs the whole per-product raster chain
+(operators.raster.process_product) in the same task and emits one
+STACK_SCHEMA row per product. Every task builds one TokenManager from
+the token URL (a driver-side manager cannot serve executors); a 401
 triggers on_unauthorized() + one retry, mirroring the reference's
 rerun-token-access path. urllib-only (no requests in this
-container); the decode step defaults to the pure-numpy GeoTIFF codec.
+container), with a socket timeout on every fetch; the decode step
+defaults to the pure-numpy GeoTIFF codec.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -28,11 +35,23 @@ from typing import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from etl_sentinel_imagery_spark.functions.geotiff import decode_geotiff
+from etl_sentinel_imagery_spark.operators.raster import (
+    SINGLE_BAND_SCHEMA,
+    STACK_SCHEMA,
+    as_affine,
+    process_product,
+    raster_batch,
+    stack_batch,
+)
 from etl_sentinel_imagery_spark.sources.auth import TokenManager
 
 CHUNK_SIZE = 8192  # imagery_store.py:146
+#: Seconds any one blocking socket step (connect, each read) of a band or
+#: token fetch may take; a server that accepts and then stalls raises
+#: instead of hanging the task.
+SOCKET_TIMEOUT_S = 60.0
 MAX_REDIRECTS = 10
 CONNECTION_QUOTA = 4  # imagery_store.py:45 server-side limit
 
@@ -47,7 +66,7 @@ _OPENER = urllib.request.build_opener(_NoRedirect)
 
 def _get(url: str, headers: dict[str, str]):
     req = urllib.request.Request(url, headers=headers)
-    return _OPENER.open(req)
+    return _OPENER.open(req, timeout=SOCKET_TIMEOUT_S)
 
 
 def download_band(url: str, tm: TokenManager) -> bytes:
@@ -90,17 +109,13 @@ def download_band(url: str, tm: TokenManager) -> bytes:
 
 def fetch_json_token(token_url: str) -> str:
     """CDSE-style token endpoint: GET → {'access_token': ...}."""
-    import json
-
-    with urllib.request.urlopen(token_url) as r:
+    with urllib.request.urlopen(token_url, timeout=SOCKET_TIMEOUT_S) as r:
         return json.loads(r.read())["access_token"]
 
 
 def make_token_manager(token_url: str) -> TokenManager:
     """Executor-side TokenManager factory (picklable via partial on this
     module-level function + a URL string)."""
-    import functools
-
     return TokenManager(fetch_token=functools.partial(fetch_json_token, token_url))
 
 
@@ -116,6 +131,126 @@ def node_url(base: str, product_id: str, product_name: str, band_path: list[str]
     return f"{base}/Products({product_id}){nodes}/$value"
 
 
+def decode_geotiff_band(buf: bytes) -> dict:
+    """The default ``decode``: band 0 of a GeoTIFF payload."""
+    arr, transform, crs, nodata = decode_geotiff(buf)
+    return {
+        "height": arr.shape[1],
+        "width": arr.shape[2],
+        "pixels": arr[0],
+        "transform": transform,
+        "crs": crs,
+        "nodata": 0 if nodata is None else nodata,
+    }
+
+
+def http_reader(
+    url_for: Callable[[str, str], str],
+    token_manager_factory: Callable[[], TokenManager],
+    decode: Callable[[bytes], dict] | None = None,
+) -> Callable[[str, str], dict]:
+    """Open the HTTP read for one executor task: ``(product_id, band) →``
+    the decoded band, over one TokenManager for the whole task."""
+    tm = token_manager_factory()
+    decode = decode or decode_geotiff_band
+    return lambda product_id, band: decode(download_band(url_for(product_id, band), tm))
+
+
+def read_bands(
+    read: Callable[[str, str], dict], product_id: str, bands: list[str]
+) -> Iterator[tuple[dict, np.ndarray]]:
+    """One product's bands in sorted order, each read when the consumer
+    asks for it, as (fields, int32 pixels). A read error gets a note
+    naming the product and band; decoded pixels whose shape disagrees
+    with the decoder's height/width raise ValueError."""
+    for band in sorted(bands):
+        try:
+            d = read(product_id, band)
+        except Exception as e:
+            e.add_note(f"reading product {product_id} band {band}")
+            raise
+        pixels = np.asarray(d["pixels"], dtype=np.int32)
+        if pixels.shape != (d["height"], d["width"]):
+            raise ValueError(
+                f"{product_id}/{band}: decoded pixels have shape "
+                f"{pixels.shape}, header says {d['height']}x{d['width']}"
+            )
+        yield {
+            "product_id": product_id, "band": band,
+            "height": d["height"], "width": d["width"],
+            "transform": as_affine(d["transform"]), "crs": d["crs"], "nodata": d["nodata"],
+        }, pixels
+
+
+def _product_pass(
+    products: DataFrame,
+    bands: list[str],
+    open_reader: Callable[[], Callable[[str, str], dict]],
+    emit: Callable[[Iterator[tuple[dict, np.ndarray]]], Iterator[pa.RecordBatch]],
+    schema: str,
+    quota: int,
+) -> DataFrame:
+    """The fetch task skeleton. ``products(uuid)`` is coalesced to ``quota``
+    tasks, so at most ``quota`` connections are open cluster-wide and no
+    shuffle is added. Each task opens one reader and hands ``emit`` every
+    product's :func:`read_bands`; ``emit`` yields rows of ``schema``."""
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        read = open_reader()  # one lifecycle per partition/task
+        for batch in batches:
+            for product_id in batch.column("uuid").to_pylist():
+                yield from emit(read_bands(read, product_id, bands))
+
+    return products.select("uuid").coalesce(quota).mapInArrow(_run, schema=schema)
+
+
+def _band_rows(rows: Iterator[tuple[dict, np.ndarray]]) -> Iterator[pa.RecordBatch]:
+    for m, pixels in rows:
+        keys = {"product_id": pa.array([m["product_id"]]), "band": pa.array([m["band"]])}
+        yield raster_batch(keys, pixels, m["transform"], m["crs"], m["nodata"])
+
+
+def _stack_rows(
+    rows: Iterator[tuple[dict, np.ndarray]], n_bands: int, **steps
+) -> Iterator[pa.RecordBatch]:
+    if n_bands:
+        yield stack_batch(*process_product(rows, n_bands, **steps))
+
+
+def fetch_bands(
+    products: DataFrame,
+    bands: list[str],
+    open_reader: Callable[[], Callable[[str, str], dict]],
+    quota: int = CONNECTION_QUOTA,
+) -> DataFrame:
+    """products(uuid) × bands → SINGLE_BAND_SCHEMA rows, one per band.
+
+    ``open_reader()`` runs once per executor task and returns that task's
+    ``read(product_id, band)`` → {height, width, pixels, transform, crs,
+    nodata}, where ``pixels`` is a 2-D array (an ndarray or nested lists)
+    and ``transform`` an {a..f} mapping or a 6-sequence."""
+    return _product_pass(products, bands, open_reader, _band_rows, SINGLE_BAND_SCHEMA, quota)
+
+
+def fetch_stacks(
+    products: DataFrame,
+    bands: list[str],
+    open_reader: Callable[[], Callable[[str, str], dict]],
+    normalize: bool = True,
+    clip_bbox: tuple[float, float, float, float] | None = None,
+    reproject_4326: bool = False,
+) -> DataFrame:
+    """products(uuid) → STACK_SCHEMA rows, one per product: the task that
+    reads a product's bands (as :func:`fetch_bands`) also runs
+    operators.raster.process_product on them, so no band row is shuffled
+    and the stack crosses to the JVM once."""
+    emit = functools.partial(
+        _stack_rows, n_bands=len(bands),
+        normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
+    )
+    return _product_pass(products, bands, open_reader, emit, STACK_SCHEMA, CONNECTION_QUOTA)
+
+
 def fetch_bands_http(
     spark: SparkSession,
     products: DataFrame,
@@ -129,49 +264,7 @@ def fetch_bands_http(
 
     ``url_for(uuid, band)`` builds each request URL (node_url for
     reference parity, anything for tests). ``decode`` maps payload bytes
-    to {height, width, pixels, transform, crs, nodata}, where ``pixels``
-    is a 2-D array (an ndarray or nested lists) and ``transform`` an
-    {a..f} mapping or a 6-sequence — it defaults to the GeoTIFF codec.
-    coalesce(quota) bounds cluster-wide connections."""
-    from etl_sentinel_imagery_spark.operators.raster import (
-        SINGLE_BAND_SCHEMA,
-        raster_batch,
-        row_keys,
-    )
-
-    if decode is None:
-        from etl_sentinel_imagery_spark.functions.geotiff import decode_geotiff
-
-        def decode(buf: bytes) -> dict:
-            arr, transform, crs, nodata = decode_geotiff(buf)
-            return {
-                "height": arr.shape[1],
-                "width": arr.shape[2],
-                "pixels": arr[0],
-                "transform": transform,
-                "crs": crs,
-                "nodata": 0 if nodata is None else nodata,
-            }
-
-    tasks = products.select(F.col("uuid").alias("product_id")).crossJoin(
-        spark.createDataFrame([(b,) for b in sorted(bands)], "band string")
-    )
-
-    def _fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tm = token_manager_factory()  # one lifecycle per partition/task
-        for batch in batches:
-            for i, r in enumerate(batch.to_pylist()):
-                payload = download_band(url_for(r["product_id"], r["band"]), tm)
-                d = decode(payload)
-                pixels = np.asarray(d["pixels"], dtype=np.int32)
-                if pixels.shape != (d["height"], d["width"]):
-                    raise ValueError(
-                        f"{r['product_id']}/{r['band']}: decoded pixels have shape "
-                        f"{pixels.shape}, header says {d['height']}x{d['width']}"
-                    )
-                yield raster_batch(
-                    row_keys(batch, i, "product_id", "band"),
-                    pixels, d["transform"], d["crs"], d["nodata"],
-                )
-
-    return tasks.coalesce(quota).mapInArrow(_fetch, schema=SINGLE_BAND_SCHEMA)
+    to the fields :func:`fetch_bands` reads — it defaults to the GeoTIFF
+    codec. coalesce(quota) bounds cluster-wide connections."""
+    opener = functools.partial(http_reader, url_for, token_manager_factory, decode)
+    return fetch_bands(products, bands, opener, quota)

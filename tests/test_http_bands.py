@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import functools
 import json
+import socket
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import numpy as np
@@ -29,11 +31,26 @@ def _band_array(pid: str, band: str) -> np.ndarray:
 class _FakeCdse(BaseHTTPRequestHandler):
     issued = 0
     lock = threading.Lock()
+    # concurrency counters: requests in flight now and at most, and band
+    # payloads served; ``delay`` holds each payload so requests overlap
+    active = peak = served = 0
+    delay = 0.0
 
     def log_message(self, *args):  # quiet
         pass
 
     def do_GET(self):
+        cls = type(self)
+        with cls.lock:
+            cls.active += 1
+            cls.peak = max(cls.peak, cls.active)
+        try:
+            self._get()
+        finally:
+            with cls.lock:
+                cls.active -= 1
+
+    def _get(self):
         cls = type(self)
         if self.path == "/token":
             with cls.lock:
@@ -78,9 +95,16 @@ class _FakeCdse(BaseHTTPRequestHandler):
                 self.end_headers()
                 return
             pid, band = self.path[len("/data/"):].split("/")
+            if pid == "p-503":
+                self.send_response(503)
+                self.end_headers()
+                return
             buf = encode_geotiff(
                 _band_array(pid, band)[None, :, :], TRANSFORM, "epsg:32631", 0
             )
+            time.sleep(cls.delay)
+            with cls.lock:
+                cls.served += 1
             self.send_response(200)
             self.send_header("Content-Length", str(len(buf)))
             self.end_headers()
@@ -238,3 +262,111 @@ def test_fetch_jp2_bands_end_to_end(spark, server):
     assert (row["height"], row["width"]) == (256, 512)
     assert row["band"] == "B02" and row["crs"] == "epsg:32631"
     assert row["pixels"][0][:4] == [0, 3, 6, 9]
+
+
+def test_fetch_stacks_holds_the_connection_quota(spark, server, monkeypatch):
+    """The pipeline's per-product pass: 6 products × 2 bands download in
+    at most 4 concurrent connections, each band exactly once, and each
+    product comes back as one stack in sorted band order."""
+    from etl_sentinel_imagery_spark.plans.acquisition import HttpBandSource
+    from etl_sentinel_imagery_spark.sources.http_bands import fetch_stacks
+
+    monkeypatch.setattr(_FakeCdse, "delay", 0.05)
+    _FakeCdse.peak = _FakeCdse.served = 0
+    products = [f"p-q{i}" for i in range(6)]
+    out = fetch_stacks(
+        spark.createDataFrame([(p,) for p in products], "uuid string"),
+        ["B03", "B02"],
+        HttpBandSource(server, f"{server}/token").reader(),
+        normalize=False,
+    )
+    assert out.rdd.getNumPartitions() <= 4
+    rows = out.collect()
+    assert 1 <= _FakeCdse.peak <= 4
+    assert _FakeCdse.served == 12
+    assert sorted(r["product_id"] for r in rows) == products
+    for r in rows:
+        assert r["bands"] == ["B02", "B03"]
+        want = np.stack([_band_array(r["product_id"], b) for b in ["B02", "B03"]])
+        np.testing.assert_array_equal(np.array(r["pixels"]), want)
+
+
+def _shifted_b03(open_reader):
+    """A reader whose band B03 sits one pixel east of the others."""
+
+    def open_shifted():
+        read = open_reader()
+
+        def read_shifted(product_id, band):
+            d = read(product_id, band)
+            return {**d, "transform": {**d["transform"], "c": 600010.0}} if band == "B03" else d
+
+        return read_shifted
+
+    return open_shifted
+
+
+@pytest.mark.parametrize("fault", ["geometry", "shape", "http_503"])
+def test_fetch_stacks_errors_name_product_and_band(spark, server, fault):
+    """A failure inside the per-product task still names the product and
+    band it happened on: the stack's geometry guard, the decoded-shape
+    guard and an HTTP 503 from the band server."""
+    from etl_sentinel_imagery_spark.functions.geotiff import decode_geotiff
+    from etl_sentinel_imagery_spark.plans.acquisition import HttpBandSource
+    from etl_sentinel_imagery_spark.sources.http_bands import (
+        fetch_stacks,
+        http_reader,
+        make_token_manager,
+        simple_band_url,
+    )
+
+    def wrong_shape(buf):
+        arr, t, crs, nodata = decode_geotiff(buf)
+        return {"height": 4, "width": 3, "pixels": arr[0], "transform": t,
+                "crs": crs, "nodata": 0}
+
+    product, reader = "p-full", HttpBandSource(server, f"{server}/token").reader()
+    if fault == "geometry":
+        reader = _shifted_b03(reader)
+        match = "ValueError: stack_bands: product p-full band B03 differs from band B02"
+    elif fault == "shape":
+        reader = functools.partial(
+            http_reader, functools.partial(simple_band_url, server),
+            functools.partial(make_token_manager, f"{server}/token"), wrong_shape,
+        )
+        match = r"ValueError: p-full/B02: decoded pixels have shape \(3, 4\), header says 4x3"
+    else:
+        product = "p-503"
+        match = "HTTPError: HTTP Error 503"
+    products = spark.createDataFrame([(product,)], "uuid string")
+    with pytest.raises(Exception, match=match) as err:
+        fetch_stacks(products, ["B03", "B02"], reader).collect()
+    if fault == "http_503":  # the read's note names where it failed
+        assert "reading product p-503 band B02" in str(err.value)
+
+
+def test_stalled_server_times_out(monkeypatch):
+    """A server that accepts the connection and never answers makes both
+    the band and the token fetch raise after the socket timeout instead
+    of hanging the task."""
+    from etl_sentinel_imagery_spark.sources import http_bands
+    from etl_sentinel_imagery_spark.sources.auth import TokenManager
+
+    monkeypatch.setattr(http_bands, "SOCKET_TIMEOUT_S", 0.2)
+    held = []
+    with socket.create_server(("127.0.0.1", 0)) as srv:
+
+        def accept_and_stall():
+            for _ in range(2):
+                held.append(srv.accept()[0])
+
+        threading.Thread(target=accept_and_stall, daemon=True).start()
+        base = f"http://127.0.0.1:{srv.getsockname()[1]}"
+        t0 = time.monotonic()
+        with pytest.raises(TimeoutError):
+            http_bands.download_band(f"{base}/band/p/B02", TokenManager(lambda: "tok"))
+        with pytest.raises(TimeoutError):
+            http_bands.fetch_json_token(f"{base}/token")
+        assert time.monotonic() - t0 < 5
+    for conn in held:
+        conn.close()

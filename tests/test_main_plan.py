@@ -89,10 +89,22 @@ class _FailingSource(SyntheticBandSource):
         super().__init__(height=4, width=4)
         self.bad = bad
 
-    def fetch(self, spark, products, bands):
-        if self.bad in [r["uuid"] for r in products.select("uuid").collect()]:
-            raise OSError(f"band server down for {self.bad}")
-        return super().fetch(spark, products, bands)
+    def reader(self):
+        # closures, not methods: executors unpickle them by value, without
+        # importing this test module
+        bad, open_synthetic = self.bad, super().reader()
+
+        def open_reader():
+            read = open_synthetic()
+
+            def read_or_fail(product_id, band):
+                if product_id == bad:
+                    raise OSError(f"band server down for {bad}")
+                return read(product_id, band)
+
+            return read_or_fail
+
+        return open_reader
 
 
 def test_run_isolates_a_failing_aoi(spark, tmp_path, caplog):

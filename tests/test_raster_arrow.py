@@ -73,7 +73,7 @@ def server():
     srv.server_close()
 
 
-def _fetch(spark, server, decode=None):
+def _fetch(spark, server, decode=None, product="p-1"):
     from etl_sentinel_imagery_spark.sources.http_bands import (
         fetch_bands_http,
         make_token_manager,
@@ -82,7 +82,7 @@ def _fetch(spark, server, decode=None):
 
     return fetch_bands_http(
         spark,
-        spark.createDataFrame([("p-1",)], "uuid string"),
+        spark.createDataFrame([(product,)], "uuid string"),
         BANDS,
         url_for=functools.partial(simple_band_url, server),
         token_manager_factory=functools.partial(make_token_manager, f"{server}/token"),
@@ -139,6 +139,63 @@ def test_pipeline_equals_numpy_kernels(spark, server):
     assert got["tif"] == encode_geotiff(
         warped, dict(zip("abcdef", dst_t)), "epsg:4326", 0
     )
+
+
+def test_pipeline_pass_equals_staged_reference(spark, server, tmp_path):
+    """acquire and run_joined fetch, stack, normalize, clip and reproject
+    each product in one task; their caches must hold byte for byte what
+    the staged stages (stack_bands → clip_stacks → reproject_stacks →
+    with_geotiff) give for the same served bands."""
+    import json
+
+    from etl_sentinel_imagery_spark.operators.raster import (
+        clip_stacks,
+        reproject_stacks,
+    )
+    from etl_sentinel_imagery_spark.operators.raster_io import with_geotiff
+    from etl_sentinel_imagery_spark.plans.acquisition import HttpBandSource, acquire
+    from etl_sentinel_imagery_spark.plans.main import run_joined
+    from etl_sentinel_imagery_spark.sources.catalog_fixture import (
+        AOI,
+        SELECT_PARAMS,
+        catalog_df,
+    )
+    from etl_sentinel_imagery_spark.sources.config import AcquisitionConfig
+
+    src = HttpBandSource(server, f"{server}/token")
+    aoi = (AOI["minx"], AOI["miny"], AOI["maxx"], AOI["maxy"])
+    bbox = (600010.0, 4799960.0, 600060.0, 4799990.0)
+    staged = stack_bands(_fetch(spark, server, product="p-full"), normalize=True)
+
+    tif_cache = str(tmp_path / "tif")
+    acquire(
+        spark, catalog_df(spark), aoi, SELECT_PARAMS, BANDS, src, cache_dir=tif_cache,
+        clip_bbox=bbox, reproject_4326=True, cache_format="geotiff",
+    )
+    (want,) = with_geotiff(
+        reproject_stacks(clip_stacks(staged, bbox), "epsg:4326"), dtype="uint8"
+    ).collect()
+    (got,) = spark.read.parquet(tif_cache).collect()
+    assert (got["uuid"], got["bands"]) == ("p-full", sorted(BANDS))
+    assert got["tif"] == want["tif"]
+
+    x0, y0, x1, y1 = aoi
+    ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+    aoi_path = tmp_path / "aoi.geojson"
+    aoi_path.write_text(json.dumps({"type": "FeatureCollection", "features": [{
+        "type": "Feature", "properties": {"fid": 1},
+        "geometry": {"type": "Polygon", "coordinates": [ring]},
+    }]}))
+    pq_cache = str(tmp_path / "parquet")
+    run_joined(
+        spark, AcquisitionConfig(aoi_path=str(aoi_path), bands=BANDS),
+        catalog_df(spark), src, cache_dir=pq_cache,
+    )
+    (want,) = staged.collect()
+    (got,) = spark.read.parquet(pq_cache).collect()
+    assert (got["uuid"], got["bands"]) == ("p-full", want["bands"])
+    assert got["pixels"] == want["pixels"]
+    assert got["transform"] == want["transform"] and got["crs"] == want["crs"]
 
 
 @pytest.mark.parametrize("pixels_as", ["ndarray", "list"])

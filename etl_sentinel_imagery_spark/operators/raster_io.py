@@ -9,6 +9,10 @@ file-based GTiff write/read cycle
 (`/root/reference/code/tx.py:28-34`, `dataset.py:54-59`) with bytes in
 the DataFrame instead of paths on a filesystem. Both cache sinks (parquet
 rasters, GeoTIFF bytes) share one uuid-keyed writer, :func:`write_cache`.
+One encode (:func:`encode_stack`) serves the staged stage
+(:func:`with_geotiff`) and the pipeline's per-product task, which emits
+GEOTIFF_SCHEMA rows (:func:`geotiff_batch`, sources.http_bands.
+fetch_stacks with ``encode``) so a product's pixels cross to Python once.
 """
 
 from __future__ import annotations
@@ -25,27 +29,46 @@ from etl_sentinel_imagery_spark.functions.geotiff import (
 )
 from etl_sentinel_imagery_spark.operators.raster import (
     STACK_SCHEMA,
+    as_affine,
     raster_batch,
     raster_rows,
 )
+
+#: The GeoTIFF cache row: the product, its band names and the encoded stack.
+GEOTIFF_SCHEMA = "product_id string, bands array<string>, tif binary"
+
+
+def encode_stack(r: dict, pixels: np.ndarray, dtype: str) -> bytes:
+    """One raster (fields ``r``: transform, crs, nodata) as GeoTIFF bytes
+    with ``dtype`` samples ('uint8' after normalization, 'int32' for raw
+    reflectance counts)."""
+    transform = dict(zip("abcdef", as_affine(r["transform"])))
+    return encode_geotiff(pixels.astype(dtype), transform, r["crs"], r["nodata"])
+
+
+def geotiff_batch(r: dict, pixels: np.ndarray, dtype: str) -> pa.RecordBatch:
+    """One GEOTIFF_SCHEMA row from a stack's fields and pixels."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r["product_id"]], pa.string()),
+            pa.array([list(r["bands"])], pa.list_(pa.string())),
+            pa.array([encode_stack(r, pixels, dtype)], pa.binary()),
+        ],
+        names=["product_id", "bands", "tif"],
+    )
 
 
 def with_geotiff(stacked: DataFrame, dtype: str = "int32") -> DataFrame:
     """Append ``tif``: each stacked raster encoded as GeoTIFF bytes.
 
-    ``dtype`` picks the sample type ('uint8' after normalization,
-    'int32' for raw reflectance counts)."""
-    np_dtype = np.dtype(dtype)
+    ``dtype`` picks the sample type (:func:`encode_stack`)."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in stacked.schema.fields
     ) + ", tif binary"
 
     def _encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            tifs = [
-                encode_geotiff(pix.astype(np_dtype), r["transform"], r["crs"], r["nodata"])
-                for r, pix in raster_rows(batch)
-            ]
+            tifs = [encode_stack(r, pix, dtype) for r, pix in raster_rows(batch)]
             yield batch.append_column("tif", pa.array(tifs, pa.binary()))
 
     return stacked.mapInArrow(_encode, schema=out_schema)
@@ -93,7 +116,8 @@ def write_cache(stacked: DataFrame, cache_dir: str) -> None:
 def write_cache_geotiff(stacked: DataFrame, cache_dir: str, dtype: str = "int32") -> None:
     """S8 sink: the :func:`write_cache` layout holding GeoTIFF BYTES
     (uuid, bands, tif) — the reference's `{uuid}.tif` files,
-    dataset.py:54."""
+    dataset.py:54. The staged form: the pipeline encodes in the
+    per-product task instead (sources.http_bands.fetch_stacks)."""
     write_cache(
         with_geotiff(stacked, dtype=dtype).select("product_id", "bands", "tif"),
         cache_dir,

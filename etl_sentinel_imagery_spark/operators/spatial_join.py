@@ -118,7 +118,7 @@ def grid_spatial_join(
     with NULLs."""
     if how not in ("inner", "left"):
         raise ValueError(f"unsupported join type {how!r}")
-    bb = wkt_bbox(F.col(wkt_col))
+    bb = wkt_bbox(wkt_col)
     n_cells = (
         (F.floor(bb["maxx"] / cell_size) - F.floor(bb["minx"] / cell_size) + 1)
         * (F.floor(bb["maxy"] / cell_size) - F.floor(bb["miny"] / cell_size) + 1)

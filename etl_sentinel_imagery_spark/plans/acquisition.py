@@ -9,10 +9,13 @@ operators.raster.process_product (stack(+normalize) → clip → reproject),
 serves both the tile (R6) and the polygon (R7) path; :func:`acquire` and
 plans.main.run_joined run it inside the task that downloads a product's
 bands (sources.http_bands.fetch_stacks), so each product crosses the
-JVM↔Python boundary once and no band row is shuffled.
+JVM↔Python boundary once and no band row is shuffled; for the GeoTIFF
+cache the same task also encodes the stack.
 :func:`etl_process_tile` is the same kernels as separate Spark stages
 over per-band rows. Both cache formats go through the one keyed writer
-in operators.raster_io.
+in operators.raster_io. An :func:`acquire` plans its selection once, as
+one SQL statement (operators.selection.best_product), inside the cache
+write: that write is its only Spark action.
 
 The downloader sits behind a source interface: a :class:`BandSource`
 gives a picklable ``reader()``, the per-task read of one (product, band)
@@ -37,16 +40,8 @@ from etl_sentinel_imagery_spark.operators.raster import (
     reproject_stacks,
     stack_bands,
 )
-from etl_sentinel_imagery_spark.operators.raster_io import (
-    write_cache,
-    write_cache_geotiff,
-)
-from etl_sentinel_imagery_spark.operators.selection import (
-    best_product_direct,
-    covering,
-    filter_products,
-    with_coverage_ratio,
-)
+from etl_sentinel_imagery_spark.operators.raster_io import write_cache
+from etl_sentinel_imagery_spark.operators.selection import best_product
 from etl_sentinel_imagery_spark.sources.http_bands import (
     fetch_bands,
     fetch_stacks,
@@ -135,18 +130,10 @@ def select_product(
     The by-AOI path applies the spatial Intersects predicate (P7,
     imagery_store.py:185) — products disjoint from the AOI never reach
     ranking, so an off-catalog or zero-area AOI yields an empty selection
-    rather than a zero-coverage 'winner'."""
-    filtered = filter_products(
-        catalog,
-        params["platform"],
-        params["product_type"],
-        params["date_start"],
-        params["date_end"],
-        params["cloud_max"],
-        tile_id=tile_id,
-    )
-    # top-1 via TakeOrderedAndProject — no full ranking materialized
-    return best_product_direct(covering(with_coverage_ratio(filtered, aoi_bbox)), bands)
+    rather than a zero-coverage 'winner'. One parameterized SQL
+    statement (operators.selection.best_product); the top-1 plans as
+    TakeOrderedAndProject, so no full ranking is materialized."""
+    return best_product(catalog, aoi_bbox, params, bands, tile_id=tile_id)
 
 
 def etl_process_tile(
@@ -185,28 +172,33 @@ def acquire(
     """Entry point 2 analog (dataset.py:35-59): the full per-AOI pipeline.
 
     ``clip_bbox`` must be expressed in the RASTER's CRS (the reference
-    reprojects the AOI into the product CRS before masking). Early
-    bail-out (P11, imagery_store.py:59): empty selection short-circuits
-    before any fetch work is scheduled. ``cache_format`` is "parquet" or
-    "geotiff" (the reference's ``{uuid}.tif`` cache, dataset.py:54, as
-    bytes); any other value raises ValueError before any Spark job."""
-    sinks = {
-        "parquet": write_cache,
-        "geotiff": functools.partial(
-            write_cache_geotiff, dtype="uint8" if normalize else "int32"
-        ),
-    }
-    if cache_format not in sinks:
+    reprojects the AOI into the product CRS before masking).
+    ``cache_format`` is "parquet" or "geotiff" (the reference's
+    ``{uuid}.tif`` cache, dataset.py:54, as bytes, encoded in the
+    per-product task); any other value raises ValueError before any
+    Spark job.
+
+    The selection and the per-product pass form one plan, and the cache
+    write is its only action. Bail-out (P11, imagery_store.py:59): an
+    empty selection flows zero rows through the pass — no band request,
+    no ``uuid=`` partition — with no pre-pass job.
+
+    Returns the stacked rasters (STACK_SCHEMA, empty when nothing was
+    selected). The frame is LAZY and not persisted: using it after the
+    cache write runs the selection and the pass again and downloads
+    every band a second time."""
+    encodings = {"parquet": None, "geotiff": "uint8" if normalize else "int32"}
+    if cache_format not in encodings:
         raise ValueError(
-            f"unknown cache_format {cache_format!r}; expected one of {sorted(sinks)}"
+            f"unknown cache_format {cache_format!r}; expected one of {sorted(encodings)}"
         )
     product = select_product(catalog, aoi_bbox, params, bands)
-    if product.isEmpty():
-        return product
-    stacked = fetch_stacks(
-        product, bands, source.reader(),
-        normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
-    )
+    steps = {"normalize": normalize, "clip_bbox": clip_bbox, "reproject_4326": reproject_4326}
+    stacked = fetch_stacks(product, bands, source.reader(), **steps)
     if cache_dir is not None:
-        sinks[cache_format](stacked, cache_dir)
+        encode = encodings[cache_format]
+        cached = stacked if encode is None else fetch_stacks(
+            product, bands, source.reader(), encode=encode, **steps
+        )
+        write_cache(cached, cache_dir)
     return stacked

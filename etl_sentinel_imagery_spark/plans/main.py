@@ -96,7 +96,12 @@ def run(
     """Fault-isolation mode: one acquisition per AOI row; failures are
     tolerated per-row (download_imagery.py:44-49 intended semantics).
     Prefer :func:`run_joined` unless per-AOI failure isolation is
-    required."""
+    required.
+
+    Returns each AOI's :func:`acquire` frame. Those frames are LAZY and
+    not persisted: using one after its cache write runs that AOI's
+    selection and per-product pass again and downloads every band a
+    second time."""
     if config.aoi_path is None:
         raise ValueError("config.aoi_path is required")
     aois = read_aoi(spark, config.aoi_path).collect()

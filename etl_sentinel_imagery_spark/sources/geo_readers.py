@@ -17,22 +17,14 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_sentinel_imagery_spark.operators.selection import wkt_bbox
+from etl_sentinel_imagery_spark.operators.selection import bbox_sql
 
 AOI_SCHEMA = "fid bigint, tile_id string, geometry string"
 
 
 def _with_bbox(df: DataFrame) -> DataFrame:
-    bb = wkt_bbox(F.col("geometry"))
-    return df.withColumn(
-        "bbox",
-        F.struct(
-            bb["minx"].alias("minx"),
-            bb["miny"].alias("miny"),
-            bb["maxx"].alias("maxx"),
-            bb["maxy"].alias("maxy"),
-        ),
-    )
+    fields = ", ".join(f"{v} AS {k}" for k, v in bbox_sql("geometry").items())
+    return df.selectExpr("*", f"struct({fields}) AS bbox")
 
 
 def read_aoi_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -15,10 +15,11 @@ emitters share that read: :func:`fetch_bands` hands each band to the JVM
 as one SINGLE_BAND_SCHEMA row, and :func:`fetch_stacks` — the pipeline's
 path — runs the whole per-product raster chain
 (operators.raster.process_product) in the same task and emits one
-STACK_SCHEMA row per product. Every task builds one TokenManager from
-the token URL (a driver-side manager cannot serve executors); a 401
-triggers on_unauthorized() + one retry, mirroring the reference's
-rerun-token-access path. urllib-only (no requests in this
+STACK_SCHEMA row per product, or, given a GeoTIFF sample type, one
+GEOTIFF_SCHEMA row with the stack already encoded. Every task builds
+one TokenManager from the token URL (a driver-side manager cannot serve
+executors); a 401 triggers on_unauthorized() + one retry, mirroring
+the reference's rerun-token-access path. urllib-only (no requests in this
 container), with a socket timeout on every fetch; the decode step
 defaults to the pure-numpy GeoTIFF codec.
 """
@@ -35,6 +36,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from etl_sentinel_imagery_spark.functions.geotiff import decode_geotiff
 from etl_sentinel_imagery_spark.operators.raster import (
@@ -45,6 +47,7 @@ from etl_sentinel_imagery_spark.operators.raster import (
     raster_batch,
     stack_batch,
 )
+from etl_sentinel_imagery_spark.operators.raster_io import GEOTIFF_SCHEMA, geotiff_batch
 from etl_sentinel_imagery_spark.sources.auth import TokenManager
 
 CHUNK_SIZE = 8192  # imagery_store.py:146
@@ -201,7 +204,14 @@ def _product_pass(
             for product_id in batch.column("uuid").to_pylist():
                 yield from emit(read_bands(read, product_id, bands))
 
-    return products.select("uuid").coalesce(quota).mapInArrow(_run, schema=schema)
+    return products.select("uuid").coalesce(quota).mapInArrow(_run, schema=_struct(schema))
+
+
+@functools.cache
+def _struct(ddl: str) -> StructType:
+    """A schema constant parsed once: given the DDL text, mapInArrow
+    parses it through the JVM on every plan build."""
+    return StructType.fromDDL(ddl)
 
 
 def _band_rows(rows: Iterator[tuple[dict, np.ndarray]]) -> Iterator[pa.RecordBatch]:
@@ -211,10 +221,11 @@ def _band_rows(rows: Iterator[tuple[dict, np.ndarray]]) -> Iterator[pa.RecordBat
 
 
 def _stack_rows(
-    rows: Iterator[tuple[dict, np.ndarray]], n_bands: int, **steps
+    rows: Iterator[tuple[dict, np.ndarray]], n_bands: int, encode: str | None, **steps
 ) -> Iterator[pa.RecordBatch]:
     if n_bands:
-        yield stack_batch(*process_product(rows, n_bands, **steps))
+        r, pixels = process_product(rows, n_bands, **steps)
+        yield stack_batch(r, pixels) if encode is None else geotiff_batch(r, pixels, encode)
 
 
 def fetch_bands(
@@ -239,16 +250,22 @@ def fetch_stacks(
     normalize: bool = True,
     clip_bbox: tuple[float, float, float, float] | None = None,
     reproject_4326: bool = False,
+    encode: str | None = None,
 ) -> DataFrame:
     """products(uuid) → STACK_SCHEMA rows, one per product: the task that
     reads a product's bands (as :func:`fetch_bands`) also runs
     operators.raster.process_product on them, so no band row is shuffled
-    and the stack crosses to the JVM once."""
+    and the stack crosses to the JVM once. With ``encode``, a GeoTIFF
+    sample type ('uint8', 'int32'), the same task encodes the stack and
+    emits GEOTIFF_SCHEMA rows (product_id, bands, tif) instead, so the
+    GeoTIFF cache needs no second Python stage. Zero products give zero
+    rows and no band request."""
     emit = functools.partial(
-        _stack_rows, n_bands=len(bands),
+        _stack_rows, n_bands=len(bands), encode=encode,
         normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
     )
-    return _product_pass(products, bands, open_reader, emit, STACK_SCHEMA, CONNECTION_QUOTA)
+    schema = STACK_SCHEMA if encode is None else GEOTIFF_SCHEMA
+    return _product_pass(products, bands, open_reader, emit, schema, CONNECTION_QUOTA)
 
 
 def fetch_bands_http(

@@ -76,6 +76,18 @@ def test_empty_selection_bails_out(spark):
     assert out.isEmpty()
 
 
+def test_empty_and_hit_acquire_share_schema(spark):
+    """An empty selection returns the same frame shape as a hit: the
+    stacked rasters, with zero rows."""
+    src = SyntheticBandSource(height=4, width=4)
+    hit = acquire(spark, catalog_df(spark), AOI_BBOX, SELECT_PARAMS, BANDS, src)
+    empty = acquire(
+        spark, catalog_df(spark), AOI_BBOX, dict(SELECT_PARAMS, cloud_max=-1.0), BANDS, src
+    )
+    assert empty.schema == hit.schema
+    assert empty.isEmpty()
+
+
 def test_zero_area_aoi_selects_nothing(spark):
     """A zero-width or zero-height AOI box covers nothing: the selection is
     empty, like an off-catalog AOI, and acquire bails out empty instead of

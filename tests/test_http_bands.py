@@ -219,6 +219,34 @@ def test_acquire_via_http_source(spark, server):
     )
 
 
+@pytest.mark.parametrize("cache_format", ["parquet", "geotiff"])
+def test_acquire_runs_one_pass(spark, server, tmp_path, cache_format):
+    """A cache-writing acquire downloads each band once (the cache write
+    is its only pass), and an empty selection downloads nothing and
+    writes no uuid= partition, leaving the cached ones in place."""
+    from etl_sentinel_imagery_spark.plans.acquisition import HttpBandSource, acquire
+    from etl_sentinel_imagery_spark.sources.catalog_fixture import (
+        AOI,
+        SELECT_PARAMS,
+        catalog_df,
+    )
+
+    def run(params, cache):
+        _FakeCdse.served = 0
+        acquire(
+            spark, catalog_df(spark), (AOI["minx"], AOI["miny"], AOI["maxx"], AOI["maxy"]),
+            params, ["B03", "B02"], HttpBandSource(server, f"{server}/token"),
+            cache_dir=str(cache), cache_format=cache_format,
+        )
+        return _FakeCdse.served, sorted(p.name for p in cache.glob("uuid=*"))
+
+    cache = tmp_path / "cache"
+    assert run(SELECT_PARAMS, cache) == (2, ["uuid=p-full"])
+    empty = dict(SELECT_PARAMS, cloud_max=-1.0)
+    assert run(empty, cache) == (0, ["uuid=p-full"])
+    assert run(empty, tmp_path / "fresh") == (0, [])
+
+
 def test_fetch_jp2_bands_end_to_end(spark, server):
     """The reference's REAL band format over the wire (CDSE serves .jp2,
     imagery_store.py:67): redirect + auth + chunked fetch of JPEG2000

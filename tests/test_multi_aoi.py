@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -41,9 +43,9 @@ def _aoi_df(spark, rows=_AOIS):
     )
 
 
-def _filtered(spark):
+def _filtered(spark, catalog=None):
     return filter_products(
-        catalog_df(spark),
+        catalog_df(spark) if catalog is None else catalog,
         SELECT_PARAMS["platform"],
         SELECT_PARAMS["product_type"],
         SELECT_PARAMS["date_start"],
@@ -72,6 +74,36 @@ def test_joined_selection_matches_per_aoi_loop(spark):
         loop = select_product(catalog_df(spark), tuple(bbox), SELECT_PARAMS, ["B02"])
         want = [(got[fid]["uuid"], got[fid]["area_ratio"])] if fid in got else []
         assert [(r["uuid"], r["area_ratio"]) for r in loop.collect()] == want
+    # without p-full, p-east and p-south tie at 0.5 on AOI 1: both plans
+    # break the tie by the later OriginDate, p-south (2023-06-22)
+    no_full = catalog_df(spark).filter(F.col("Id") != "p-full")
+    (tie,) = select_best_per_aoi(_filtered(spark, no_full), _aoi_df(spark, _AOIS[:1])).collect()
+    (loop,) = select_product(no_full, tuple(_AOIS[0][1:]), SELECT_PARAMS, ["B02"]).collect()
+    assert (tie["uuid"], tie["area_ratio"]) == (loop["uuid"], loop["area_ratio"]) == ("p-south", 0.5)
+
+
+def _physical_plan(df, capsys) -> str:
+    capsys.readouterr()
+    df.explain()
+    return capsys.readouterr().out
+
+
+def test_selection_plan_shapes(spark, capsys):
+    """Each selection plan keeps its shape, so a rewrite cannot silently
+    add a shuffle stage (one more job per call): the single-AOI top-1 is
+    a TakeOrderedAndProject over one aggregation exchange, with no
+    window; the joined plan is a broadcast nested-loop join, an
+    aggregation exchange, and a per-fid window behind its own exchange."""
+    single = _physical_plan(
+        select_product(catalog_df(spark), tuple(_AOIS[0][1:]), SELECT_PARAMS, ["B02"]), capsys
+    )
+    assert "TakeOrderedAndProject" in single
+    assert "Window" not in single
+    assert len(re.findall(r"[+:]- Exchange ", single)) == 1
+    joined = _physical_plan(select_best_per_aoi(_filtered(spark), _aoi_df(spark)), capsys)
+    assert "BroadcastNestedLoopJoin" in joined
+    assert re.search(r"[+:]- Window \[row_number\(\).*\], \[fid#\d+\], ", joined)
+    assert len(re.findall(r"[+:]- Exchange ", joined)) == 2
 
 
 def test_zero_area_aoi_gets_no_winner_in_joined_plan(spark):

@@ -7,20 +7,31 @@ move pixels through the operators.raster codec, so payloads stay Arrow
 buffers and never become Python objects. Mirrors the reference's
 file-based GTiff write/read cycle
 (`/root/reference/code/tx.py:28-34`, `dataset.py:54-59`) with bytes in
-the DataFrame instead of paths on a filesystem. Both cache sinks (parquet
-rasters, GeoTIFF bytes) share one uuid-keyed writer, :func:`write_cache`.
-One encode (:func:`encode_stack`) serves the staged stage
-(:func:`with_geotiff`) and the pipeline's per-product task, which emits
-GEOTIFF_SCHEMA rows (:func:`geotiff_batch`, sources.http_bands.
-fetch_stacks with ``encode``) so a product's pixels cross to Python once.
+the DataFrame instead of paths on a filesystem. One encode
+(:func:`encode_stack`) serves the staged stage (:func:`with_geotiff`)
+and the pipeline's per-product task, which emits GEOTIFF_SCHEMA rows
+(:func:`geotiff_batch`, sources.http_bands.fetch_stacks with ``encode``)
+so a product's pixels cross to Python once.
+
+The uuid-keyed cache (S9, either format) has two sinks that write the
+same files. The pipeline's: each product task writes its own row with
+pyarrow into a hidden staging directory (:func:`stage_partition`), and
+the driver swaps each staged ``uuid=`` partition into place
+(:func:`commit_staged`), so no pixel goes back to the JVM to be written.
+The staged reference's: Spark's dynamic-overwrite parquet writer,
+:func:`write_cache`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import os
+import uuid
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 from etl_sentinel_imagery_spark.functions.geotiff import (
@@ -36,6 +47,13 @@ from etl_sentinel_imagery_spark.operators.raster import (
 
 #: The GeoTIFF cache row: the product, its band names and the encoded stack.
 GEOTIFF_SCHEMA = "product_id string, bands array<string>, tif binary"
+#: What a cache-writing product task returns: the staged partition's
+#: uuid and the size of the file it wrote.
+STAGED_SCHEMA = "uuid string, bytes long"
+#: The one data file of a cache partition.
+PART_FILE = "part-00000.snappy.parquet"
+#: Characters Spark escapes in a partition value (ExternalCatalogUtils).
+_UNSAFE = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
 
 
 def encode_stack(r: dict, pixels: np.ndarray, dtype: str) -> bytes:
@@ -98,8 +116,67 @@ def stacks_from_geotiff(
     return tifs.mapInArrow(_decode, schema=STACK_SCHEMA)
 
 
+def open_cache(cache_dir: str) -> tuple[pafs.FileSystem, str]:
+    """``cache_dir`` (a plain path or a filesystem URI) → (pyarrow
+    filesystem, path), resolved once on the driver. Both pickle, so the
+    product tasks stage through the same filesystem the commit uses. A
+    ``cache_dir`` pyarrow cannot open raises ValueError."""
+    uri = cache_dir if "://" in cache_dir else os.path.abspath(cache_dir)
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except (pa.ArrowException, OSError, ValueError) as e:
+        raise ValueError(f"cannot open cache_dir {cache_dir!r}: {e}") from e
+
+
+def _partition(pid: str) -> str:
+    """The ``uuid=`` directory name of a product, escaped as Spark does."""
+    return "uuid=" + "".join(f"%{ord(c):02X}" if c in _UNSAFE else c for c in pid)
+
+
+def stage_partition(fs: pafs.FileSystem, staging: str, row: pa.RecordBatch) -> pa.RecordBatch:
+    """Task side of the pipeline's cache sink: one product's row
+    (``product_id`` first) written, without that column, as the one
+    parquet file of ``staging/uuid=<product_id>/`` — the file
+    :func:`write_cache` would write. A retried task overwrites its own
+    attempt. Returns the STAGED_SCHEMA row."""
+    pid = row.column(0)[0].as_py()
+    part = f"{staging}/{_partition(pid)}"
+    fs.create_dir(part)
+    with fs.open_output_stream(f"{part}/{PART_FILE}") as out:
+        pq.write_table(pa.Table.from_batches([row.drop_columns(["product_id"])]), out)
+        nbytes = out.tell()
+    return pa.RecordBatch.from_arrays(
+        [pa.array([pid], pa.string()), pa.array([nbytes], pa.int64())], names=["uuid", "bytes"]
+    )
+
+
+def commit_staged(
+    fs: pafs.FileSystem, path: str, run: Callable[[str], Iterable[str]]
+) -> None:
+    """Driver side of the pipeline's cache sink, with the contract of
+    :func:`write_cache`'s dynamic partition overwrite. ``run(staging)``
+    stages partitions under a fresh ``.staging-*`` directory of ``path``
+    (hidden from Spark and pyarrow readers) and returns their uuids; only
+    once it returns is each ``uuid=`` partition replaced: the old
+    directory removed, the staged file moved in. If ``run`` raises,
+    nothing is committed. The staging directory goes on every exit."""
+    staging = f"{path}/.staging-{uuid.uuid4().hex}"
+    fs.create_dir(staging)
+    try:
+        for part in sorted({_partition(pid) for pid in run(staging)}):
+            target = f"{path}/{part}"
+            if fs.get_file_info(target).type != pafs.FileType.NotFound:
+                fs.delete_dir(target)
+            fs.create_dir(target)
+            fs.move(f"{staging}/{part}/{PART_FILE}", f"{target}/{PART_FILE}")
+    finally:
+        fs.delete_dir(staging)
+
+
 def write_cache(stacked: DataFrame, cache_dir: str) -> None:
-    """S9 (tx.py:92-96, dataset.py:54): idempotent uuid-keyed cache sink.
+    """S9 (tx.py:92-96, dataset.py:54): idempotent uuid-keyed cache sink,
+    the staged reference's (the pipeline stages and commits each product
+    in its own task, :func:`commit_staged`).
 
     Parquet partitioned by uuid (the ``product_id`` column) with dynamic
     partition overwrite — re-running a product replaces exactly its own
@@ -116,8 +193,8 @@ def write_cache(stacked: DataFrame, cache_dir: str) -> None:
 def write_cache_geotiff(stacked: DataFrame, cache_dir: str, dtype: str = "int32") -> None:
     """S8 sink: the :func:`write_cache` layout holding GeoTIFF BYTES
     (uuid, bands, tif) — the reference's `{uuid}.tif` files,
-    dataset.py:54. The staged form: the pipeline encodes in the
-    per-product task instead (sources.http_bands.fetch_stacks)."""
+    dataset.py:54. The staged form: the pipeline encodes and writes in
+    the per-product task instead (sources.http_bands.cache_stacks)."""
     write_cache(
         with_geotiff(stacked, dtype=dtype).select("product_id", "bands", "tif"),
         cache_dir,

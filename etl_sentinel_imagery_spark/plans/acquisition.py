@@ -8,14 +8,17 @@ positional-arg swap fixed). One composition,
 operators.raster.process_product (stack(+normalize) → clip → reproject),
 serves both the tile (R6) and the polygon (R7) path; :func:`acquire` and
 plans.main.run_joined run it inside the task that downloads a product's
-bands (sources.http_bands.fetch_stacks), so each product crosses the
-JVM↔Python boundary once and no band row is shuffled; for the GeoTIFF
-cache the same task also encodes the stack.
-:func:`etl_process_tile` is the same kernels as separate Spark stages
-over per-band rows. Both cache formats go through the one keyed writer
-in operators.raster_io. An :func:`acquire` plans its selection once, as
-one SQL statement (operators.selection.best_product), inside the cache
-write: that write is its only Spark action.
+bands, so no band row is shuffled. Their cache sink is that same task
+(sources.http_bands.cache_stacks): it encodes the GeoTIFF when asked,
+writes the product's cache partition with pyarrow into a hidden staging
+directory and hands the JVM only (uuid, bytes); the driver then swaps
+the staged partitions into place. So on the cache path no pixel crosses
+back to the JVM, for either cache format. :func:`etl_process_tile` is
+the same kernels as separate Spark stages over per-band rows, and
+operators.raster_io.write_cache is its Spark sink. An :func:`acquire`
+plans its selection once, as one SQL statement
+(operators.selection.best_product), inside the cache write: that write
+is its only Spark action.
 
 The downloader sits behind a source interface: a :class:`BandSource`
 gives a picklable ``reader()``, the per-task read of one (product, band)
@@ -40,9 +43,12 @@ from etl_sentinel_imagery_spark.operators.raster import (
     reproject_stacks,
     stack_bands,
 )
-from etl_sentinel_imagery_spark.operators.raster_io import write_cache
+from etl_sentinel_imagery_spark.operators.raster_io import open_cache
+# the staged reference's sink; perfbench imports it from this module
+from etl_sentinel_imagery_spark.operators.raster_io import write_cache  # noqa: F401
 from etl_sentinel_imagery_spark.operators.selection import best_product
 from etl_sentinel_imagery_spark.sources.http_bands import (
+    cache_stacks,
     fetch_bands,
     fetch_stacks,
     http_reader,
@@ -175,13 +181,15 @@ def acquire(
     reprojects the AOI into the product CRS before masking).
     ``cache_format`` is "parquet" or "geotiff" (the reference's
     ``{uuid}.tif`` cache, dataset.py:54, as bytes, encoded in the
-    per-product task); any other value raises ValueError before any
-    Spark job.
+    per-product task); any other value, or a ``cache_dir`` pyarrow
+    cannot open, raises ValueError before any Spark job.
 
     The selection and the per-product pass form one plan, and the cache
-    write is its only action. Bail-out (P11, imagery_store.py:59): an
-    empty selection flows zero rows through the pass — no band request,
-    no ``uuid=`` partition — with no pre-pass job.
+    write (sources.http_bands.cache_stacks) is its only action. A
+    product that fails raises and leaves the cache as it was.
+    Bail-out (P11, imagery_store.py:59): an empty selection flows zero
+    rows through the pass — no band request, no ``uuid=`` partition —
+    with no pre-pass job.
 
     Returns the stacked rasters (STACK_SCHEMA, empty when nothing was
     selected). The frame is LAZY and not persisted: using it after the
@@ -192,13 +200,9 @@ def acquire(
         raise ValueError(
             f"unknown cache_format {cache_format!r}; expected one of {sorted(encodings)}"
         )
+    cache = None if cache_dir is None else open_cache(cache_dir)
     product = select_product(catalog, aoi_bbox, params, bands)
     steps = {"normalize": normalize, "clip_bbox": clip_bbox, "reproject_4326": reproject_4326}
-    stacked = fetch_stacks(product, bands, source.reader(), **steps)
-    if cache_dir is not None:
-        encode = encodings[cache_format]
-        cached = stacked if encode is None else fetch_stacks(
-            product, bands, source.reader(), encode=encode, **steps
-        )
-        write_cache(cached, cache_dir)
-    return stacked
+    if cache is not None:
+        cache_stacks(product, bands, source.reader(), cache, encode=encodings[cache_format], **steps)
+    return fetch_stacks(product, bands, source.reader(), **steps)

@@ -8,8 +8,8 @@ Two execution modes:
 - :func:`run_joined` (DEFAULT, the scale path): every AOI in ONE joined
   plan (operators.selection.select_best_per_aoi — broadcast AOI table,
   per-fid window), then one per-product pass over the DISTINCT winning
-  products that fetches, stacks and normalizes each in one task
-  (sources.http_bands.fetch_stacks). No driver-side loop; thousands of
+  products that fetches, stacks, normalizes and caches each in one task
+  (sources.http_bands.cache_stacks). No driver-side loop; thousands of
   AOIs cost one extra broadcast join, and two AOIs sharing a winner
   fetch it once.
 - :func:`run` (fault-isolation option): the reference-shaped per-AOI
@@ -25,14 +25,18 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_sentinel_imagery_spark.operators.raster_io import write_cache
+from etl_sentinel_imagery_spark.operators.raster_io import open_cache
 from etl_sentinel_imagery_spark.plans.acquisition import BandSource, acquire
 from etl_sentinel_imagery_spark.operators.selection import (
     filter_products,
     select_best_per_aoi,
 )
 from etl_sentinel_imagery_spark.sources.config import AcquisitionConfig
-from etl_sentinel_imagery_spark.sources.http_bands import CONNECTION_QUOTA, fetch_stacks
+from etl_sentinel_imagery_spark.sources.http_bands import (
+    CONNECTION_QUOTA,
+    cache_stacks,
+    fetch_stacks,
+)
 from etl_sentinel_imagery_spark.sources.geo_readers import (
     read_aoi_csv,
     read_aoi_geojson,
@@ -70,20 +74,27 @@ def run_joined(
     products. AOIs that intersect nothing (or have zero area) simply
     don't appear in ``selection`` — no empty-guard loop needed.
 
+    With ``cache_dir``, the cache write is the call's only pass over the
+    winners: each product task writes its own ``uuid=`` partition of the
+    parquet cache (sources.http_bands.cache_stacks), so no pixel goes
+    back to the JVM to be written; a ``cache_dir`` pyarrow cannot open
+    raises ValueError before any Spark job. ``stacked`` is LAZY and not
+    persisted: using it runs the pass again.
+
     The distinct winners are spread round-robin over the connection
     quota before the fetch: adaptive execution collapses the tiny
     ``distinct()`` output to one partition, which the fetch's coalesce
     cannot split, so all products would download in one task."""
     if config.aoi_path is None:
         raise ValueError("config.aoi_path is required")
+    cache = None if cache_dir is None else open_cache(cache_dir)
     aois = read_aoi(spark, config.aoi_path)
     filtered = filter_products(catalog, **config.selection_params())
     selection = select_best_per_aoi(filtered, aois)
     winners = selection.select("uuid").distinct().repartition(CONNECTION_QUOTA)
-    stacked = fetch_stacks(winners, config.bands, source.reader(), normalize=config.normalize)
-    if cache_dir is not None:
-        write_cache(stacked, cache_dir)
-    return selection, stacked
+    if cache is not None:
+        cache_stacks(winners, config.bands, source.reader(), cache, normalize=config.normalize)
+    return selection, fetch_stacks(winners, config.bands, source.reader(), normalize=config.normalize)
 
 
 def run(

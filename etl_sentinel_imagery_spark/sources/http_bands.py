@@ -10,13 +10,15 @@ Spark shape: one task skeleton (:func:`_product_pass`). The products
 table is coalesced to the connection quota, so at most 4 concurrent
 connections exist cluster-wide and no shuffle is added; each mapInArrow
 task reads its products' bands one at a time, in sorted order, through
-the source's executor-side read (download → decode → shape guard). Two
+the source's executor-side read (download → decode → shape guard). Three
 emitters share that read: :func:`fetch_bands` hands each band to the JVM
-as one SINGLE_BAND_SCHEMA row, and :func:`fetch_stacks` — the pipeline's
-path — runs the whole per-product raster chain
-(operators.raster.process_product) in the same task and emits one
-STACK_SCHEMA row per product, or, given a GeoTIFF sample type, one
-GEOTIFF_SCHEMA row with the stack already encoded. Every task builds
+as one SINGLE_BAND_SCHEMA row; :func:`fetch_stacks` runs the whole
+per-product raster chain (operators.raster.process_product) in the same
+task and emits one STACK_SCHEMA row per product, or, given a GeoTIFF
+sample type, one GEOTIFF_SCHEMA row with the stack already encoded; and
+:func:`cache_stacks` — the pipeline's cache sink, for both formats —
+writes that same row from the task into the uuid-keyed cache and hands
+the JVM only its (uuid, bytes). Every task builds
 one TokenManager from the token URL (a driver-side manager cannot serve
 executors); a 401 triggers on_unauthorized() + one retry, mirroring
 the reference's rerun-token-access path. urllib-only (no requests in this
@@ -47,7 +49,13 @@ from etl_sentinel_imagery_spark.operators.raster import (
     raster_batch,
     stack_batch,
 )
-from etl_sentinel_imagery_spark.operators.raster_io import GEOTIFF_SCHEMA, geotiff_batch
+from etl_sentinel_imagery_spark.operators.raster_io import (
+    GEOTIFF_SCHEMA,
+    STAGED_SCHEMA,
+    commit_staged,
+    geotiff_batch,
+    stage_partition,
+)
 from etl_sentinel_imagery_spark.sources.auth import TokenManager
 
 CHUNK_SIZE = 8192  # imagery_store.py:146
@@ -243,6 +251,13 @@ def fetch_bands(
     return _product_pass(products, bands, open_reader, _band_rows, SINGLE_BAND_SCHEMA, quota)
 
 
+def _staged_rows(
+    rows: Iterator[tuple[dict, np.ndarray]], fs, staging: str, **stack
+) -> Iterator[pa.RecordBatch]:
+    for row in _stack_rows(rows, **stack):
+        yield stage_partition(fs, staging, row)
+
+
 def fetch_stacks(
     products: DataFrame,
     bands: list[str],
@@ -257,15 +272,46 @@ def fetch_stacks(
     operators.raster.process_product on them, so no band row is shuffled
     and the stack crosses to the JVM once. With ``encode``, a GeoTIFF
     sample type ('uint8', 'int32'), the same task encodes the stack and
-    emits GEOTIFF_SCHEMA rows (product_id, bands, tif) instead, so the
-    GeoTIFF cache needs no second Python stage. Zero products give zero
-    rows and no band request."""
+    emits GEOTIFF_SCHEMA rows (product_id, bands, tif) instead. Zero
+    products give zero rows and no band request."""
     emit = functools.partial(
         _stack_rows, n_bands=len(bands), encode=encode,
         normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
     )
     schema = STACK_SCHEMA if encode is None else GEOTIFF_SCHEMA
     return _product_pass(products, bands, open_reader, emit, schema, CONNECTION_QUOTA)
+
+
+def cache_stacks(
+    products: DataFrame,
+    bands: list[str],
+    open_reader: Callable[[], Callable[[str, str], dict]],
+    cache: tuple,
+    normalize: bool = True,
+    clip_bbox: tuple[float, float, float, float] | None = None,
+    reproject_4326: bool = False,
+    encode: str | None = None,
+) -> None:
+    """The pipeline's cache sink: each task of the :func:`fetch_stacks`
+    pass writes the row it builds (STACK_SCHEMA, or GEOTIFF_SCHEMA with
+    ``encode``) into the uuid-keyed cache ``cache`` = (pyarrow
+    filesystem, path), from operators.raster_io.open_cache, and returns
+    only (uuid, bytes), so no pixel goes back to the JVM to be written.
+    One action (a collect of those rows), then the staged partitions
+    replace the old ones (operators.raster_io.commit_staged). A failing
+    product raises and commits nothing; zero products touch no
+    partition."""
+    fs, path = cache
+
+    def run(staging: str) -> list[str]:
+        emit = functools.partial(
+            _staged_rows, fs=fs, staging=staging, n_bands=len(bands), encode=encode,
+            normalize=normalize, clip_bbox=clip_bbox, reproject_4326=reproject_4326,
+        )
+        staged = _product_pass(products, bands, open_reader, emit, STAGED_SCHEMA, CONNECTION_QUOTA)
+        return [r["uuid"] for r in staged.collect()]
+
+    commit_staged(fs, path, run)
 
 
 def fetch_bands_http(

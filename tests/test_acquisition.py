@@ -120,6 +120,38 @@ def test_unknown_cache_format_rejected_before_any_job(spark, tmp_path):
     assert not (tmp_path / "c").exists()
 
 
+def test_unopenable_cache_dir_rejected_before_any_job(spark, tmp_path):
+    """A cache_dir pyarrow cannot open (an unknown URI scheme) raises
+    ValueError from acquire and run_joined before either schedules a
+    single Spark job."""
+    from etl_sentinel_imagery_spark.plans.main import run_joined
+    from etl_sentinel_imagery_spark.sources.config import AcquisitionConfig
+
+    aoi_path = tmp_path / "aoi.csv"
+    # a CSV AOI file: reading one runs a header-inference job
+    aoi_path.write_text('fid,geometry\n1,"POLYGON ((1 43, 2 43, 2 44, 1 44, 1 43))"\n')
+    bad = "nosuchfs://bucket/cache"
+    sc = spark.sparkContext
+    group = "unopenable-cache-dir"
+    sc.setJobGroup(group, "acquire and run_joined with an unopenable cache_dir")
+    try:
+        with pytest.raises(ValueError, match="cannot open cache_dir 'nosuchfs://bucket/cache'"):
+            acquire(
+                spark, catalog_df(spark), AOI_BBOX, SELECT_PARAMS, BANDS,
+                SyntheticBandSource(), cache_dir=bad,
+            )
+        with pytest.raises(ValueError, match="cannot open cache_dir"):
+            run_joined(
+                spark, AcquisitionConfig(aoi_path=str(aoi_path)), catalog_df(spark),
+                SyntheticBandSource(), cache_dir=bad,
+            )
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        catalog_df(spark).count()  # the group does record jobs
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_acquire_tile_path_stack_and_normalize(spark, tmp_path):
     cache = str(tmp_path / "cache")
     out = acquire(
@@ -160,6 +192,29 @@ def test_cache_sink_idempotent_rerun(spark, tmp_path):
     cached = spark.read.parquet(cache)
     assert cached.count() == 1  # one row per product, not appended twice
     assert [r["uuid"] for r in cached.select("uuid").collect()] == ["p-full"]
+
+
+def test_acquire_caches_a_3072_product_in_the_default_heap(spark, tmp_path):
+    """A 4-band 3072² product goes through a parquet-cache acquire: the
+    product task writes the cache itself, so no JVM row ever holds the
+    ~150 MB stack (Spark's parquet sink of that row runs out of a 1 GB
+    heap). Read back with pyarrow, the cache holds one (4, 3072, 3072)
+    row of normalized pixels."""
+    import pyarrow.parquet as pq
+
+    from etl_sentinel_imagery_spark.operators.raster import from_list_array
+
+    n, cache = 3072, str(tmp_path / "cache")
+    acquire(
+        spark, catalog_df(spark), AOI_BBOX, SELECT_PARAMS, BANDS,
+        SyntheticBandSource(height=n, width=n), cache_dir=cache,
+    )
+    t = pq.read_table(f"{cache}/uuid=p-full")
+    assert t.num_rows == 1
+    assert t.column("bands").to_pylist() == [sorted(BANDS)]
+    pixels = from_list_array(t.column("pixels"))[0]
+    assert pixels.shape == (4, n, n)
+    assert 0 <= pixels.min() and pixels.max() <= 255
 
 
 def test_acquire_geotiff_cache_roundtrip(spark, tmp_path):

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import json
 import logging
+import os
+
+import pytest
 
 from etl_sentinel_imagery_spark.plans.acquisition import SyntheticBandSource
 from etl_sentinel_imagery_spark.plans.main import run, run_joined
@@ -121,3 +124,51 @@ def test_run_isolates_a_failing_aoi(spark, tmp_path, caplog):
     failures = [r for r in caplog.records if "fid=2 failed" in r.getMessage()]
     assert len(failures) == 1
     assert "band server down for p-tdj-2" in str(failures[0].exc_info[1])
+
+
+def _cache_files(cache: str) -> dict[str, tuple[bytes, int]]:
+    """Every file under a cache directory, dot-files included: relative
+    path → (content, inode)."""
+    out = {}
+    for root, _, files in os.walk(cache):
+        for f in files:
+            path = os.path.join(root, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, cache)] = (fh.read(), os.stat(path).st_ino)
+    return out
+
+
+def test_failing_product_commits_nothing(spark, tmp_path):
+    """The cache write commits only after its job succeeds: when one
+    winner's band read raises, run_joined raises, the partition an
+    earlier run committed keeps its very files (same bytes, same inodes,
+    even if the healthy product was staged again), the failing product
+    gets no partition, and no staging directory is left behind."""
+    cache = str(tmp_path / "cache")
+    run_joined(
+        spark, AcquisitionConfig(aoi_path=_write_aoi(tmp_path)), catalog_df(spark),
+        SyntheticBandSource(height=4, width=4), cache_dir=cache,
+    )
+    before = _cache_files(cache)
+    assert os.listdir(cache) == ["uuid=p-full"]
+
+    cfg = AcquisitionConfig(aoi_path=_write_aoi(tmp_path, (2.25, 43.25, 2.75, 43.75)))
+    with pytest.raises(Exception, match="band server down for p-tdj-2"):
+        run_joined(spark, cfg, catalog_df(spark), _FailingSource("p-tdj-2"), cache_dir=cache)
+    assert _cache_files(cache) == before
+    assert os.listdir(cache) == ["uuid=p-full"]
+
+
+def test_run_joined_rerun_keeps_one_row_per_product(spark, tmp_path):
+    """Re-running run_joined into the same cache replaces each product's
+    partition: one row per product, no staging directory left."""
+    cfg = AcquisitionConfig(aoi_path=_write_aoi(tmp_path, (2.25, 43.25, 2.75, 43.75)))
+    cache = str(tmp_path / "cache")
+    for _ in range(2):
+        run_joined(
+            spark, cfg, catalog_df(spark), SyntheticBandSource(height=4, width=4),
+            cache_dir=cache,
+        )
+    assert sorted(os.listdir(cache)) == ["uuid=p-full", "uuid=p-tdj-2"]
+    rows = spark.read.parquet(cache).groupBy("uuid").count().collect()
+    assert sorted((r["uuid"], r["count"]) for r in rows) == [("p-full", 1), ("p-tdj-2", 1)]

@@ -141,18 +141,41 @@ def test_pipeline_equals_numpy_kernels(spark, server):
     )
 
 
+def _assert_same_cache(spark, got_dir: str, want_dir: str) -> None:
+    """Two uuid-keyed caches read back alike through Spark (schema, with
+    the uuid partition column, and rows), and pyarrow reads each
+    partition of the first as one row."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    got, want = spark.read.parquet(got_dir), spark.read.parquet(want_dir)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    parts = sorted(p for p in os.listdir(got_dir) if p.startswith("uuid="))
+    assert parts == sorted(p for p in os.listdir(want_dir) if p.startswith("uuid="))
+    for part in parts:
+        assert pq.read_table(os.path.join(got_dir, part)).num_rows == 1
+
+
 def test_pipeline_pass_equals_staged_reference(spark, server, tmp_path):
-    """acquire and run_joined fetch, stack, normalize, clip and reproject
-    each product in one task; their caches must hold byte for byte what
-    the staged stages (stack_bands → clip_stacks → reproject_stacks →
-    with_geotiff) give for the same served bands."""
+    """acquire and run_joined fetch, stack, normalize, clip, reproject
+    and cache each product in one task; their caches must hold byte for
+    byte what the staged stages (stack_bands → clip_stacks →
+    reproject_stacks → with_geotiff) give for the same served bands, and
+    read back as Spark's sink (write_cache / write_cache_geotiff) of the
+    staged reference does."""
     import json
 
     from etl_sentinel_imagery_spark.operators.raster import (
         clip_stacks,
         reproject_stacks,
     )
-    from etl_sentinel_imagery_spark.operators.raster_io import with_geotiff
+    from etl_sentinel_imagery_spark.operators.raster_io import (
+        with_geotiff,
+        write_cache,
+        write_cache_geotiff,
+    )
     from etl_sentinel_imagery_spark.plans.acquisition import HttpBandSource, acquire
     from etl_sentinel_imagery_spark.plans.main import run_joined
     from etl_sentinel_imagery_spark.sources.catalog_fixture import (
@@ -172,12 +195,13 @@ def test_pipeline_pass_equals_staged_reference(spark, server, tmp_path):
         spark, catalog_df(spark), aoi, SELECT_PARAMS, BANDS, src, cache_dir=tif_cache,
         clip_bbox=bbox, reproject_4326=True, cache_format="geotiff",
     )
-    (want,) = with_geotiff(
-        reproject_stacks(clip_stacks(staged, bbox), "epsg:4326"), dtype="uint8"
-    ).collect()
+    warped = reproject_stacks(clip_stacks(staged, bbox), "epsg:4326")
+    (want,) = with_geotiff(warped, dtype="uint8").collect()
     (got,) = spark.read.parquet(tif_cache).collect()
     assert (got["uuid"], got["bands"]) == ("p-full", sorted(BANDS))
     assert got["tif"] == want["tif"]
+    write_cache_geotiff(warped, str(tmp_path / "tif_ref"), dtype="uint8")
+    _assert_same_cache(spark, tif_cache, str(tmp_path / "tif_ref"))
 
     x0, y0, x1, y1 = aoi
     ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
@@ -196,6 +220,8 @@ def test_pipeline_pass_equals_staged_reference(spark, server, tmp_path):
     assert (got["uuid"], got["bands"]) == ("p-full", want["bands"])
     assert got["pixels"] == want["pixels"]
     assert got["transform"] == want["transform"] and got["crs"] == want["crs"]
+    write_cache(staged, str(tmp_path / "parquet_ref"))
+    _assert_same_cache(spark, pq_cache, str(tmp_path / "parquet_ref"))
 
 
 @pytest.mark.parametrize("pixels_as", ["ndarray", "list"])
